@@ -6,10 +6,10 @@ WIP, /root/reference/README.md:67) but a first-class link-graph query
 length of the shortest edge path from the nearest source; unreachable
 vertices report -1. Deterministic, exact.
 
-Same BSP shape as min-label components: per round one edge⋈state join,
-a per-dst min aggregation (partial+final hash agg), and a least() apply —
-rounds = eccentricity of the source set, each one shuffle. The CSR path
-reuses the scalar min-monoid ``VectorKernel`` unchanged.
+One min-monoid kernel (``BfsKernel``) runs on both engines
+(runtime/gas.py ``run_kernel``): per round one edge⋈state join, a per-dst
+min aggregation with the apply folded in — rounds = eccentricity of the
+source set, each one shuffle.
 """
 
 from __future__ import annotations
@@ -19,15 +19,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hoshizora_spark.graph.core import (
-    Graph,
-    cache_superstep_edges,
-    maybe_broadcast,
-    symmetrize,
-)
-from hoshizora_spark.runtime.superstep import bsp_loop
+from hoshizora_spark.graph.core import Graph, symmetrize
+from hoshizora_spark.graph.csr import build_csr_blocks
+from hoshizora_spark.runtime.gas import DfEdges, VectorKernel, dense_sources, run_kernel
 
-_INF = 2**62  # sentinel; never survives into the output
+_INF = float(2**62)  # sentinel; never survives into the output
 
 
 @dataclass
@@ -39,6 +35,41 @@ class BfsResult:
     wall_ms_per_round: list[float] = field(default_factory=list)
 
 
+class BfsKernel(VectorKernel):
+    """Scalar min-monoid GAS form (runtime/gas.py): message = dist(src) + 1,
+    fold = min, apply = least(prev, acc). Distances ride as float64 (exact
+    < 2^53); unreached sources (dist = _INF) send nothing."""
+
+    combine = "min"
+
+    def __init__(self, sources: list[int]) -> None:
+        self.sources = sources
+
+    def init_expr(self, vid):
+        return F.when(vid.isin(self.sources), F.lit(0.0)).otherwise(F.lit(_INF))
+
+    def scatter_gather(self, src_vals, weights):
+        return src_vals + 1.0  # hop count; edge weights unused
+
+    def apply_expr(self, vid, prev, acc):
+        return F.least(prev, F.coalesce(acc, prev))
+
+    def sends(self, src_val):
+        return src_val < _INF
+
+
+def _bfs(graph, kernel, edges, max_rounds) -> BfsResult:
+    res = run_kernel(graph, kernel, edges, max_iters=max_rounds)
+    dist = F.when(F.col("val") >= _INF, F.lit(-1)).otherwise(F.col("val"))
+    return BfsResult(
+        distances=res.state.select("vid", dist.cast("long").alias("dist")),
+        rounds=res.iterations,
+        converged=res.converged,
+        changed_per_round=res.stats,
+        wall_ms_per_round=res.wall_ms,
+    )
+
+
 def bfs_distances(
     graph: Graph,
     sources: list[int],
@@ -46,90 +77,10 @@ def bfs_distances(
     max_rounds: int = 200,
     broadcast_vertices: int = 200_000,
 ) -> BfsResult:
-    spark = graph.spark
     V = graph.num_vertices
-    src_set = sorted({int(s) for s in sources})
-    bad = [s for s in src_set if s < 0 or s >= V]
-    if bad:
-        raise ValueError(f"bfs sources outside vertex domain 0..{V - 1}: {bad}")
+    kernel = BfsKernel(dense_sources(sources, V, "bfs"))
     edges = graph.edges.select("src", "dst") if directed else symmetrize(graph.edges)
-    E = edges.count()
-    # int-compacted + src-sorted per-round scan (see cache_superstep_edges)
-    edges, key_type = cache_superstep_edges(spark, edges, V, E)
-    is_source = F.col("vid").isin(src_set)
-
-    def step(state: DataFrame, it: int) -> DataFrame:
-        st_src = maybe_broadcast(
-            state.select(F.col("vid").cast(key_type).alias("src"), F.col("dist").alias("ds")),
-            V, broadcast_vertices,
-        )
-        # relax + apply in ONE groupBy(vid): per-edge candidates (ds + 1)
-        # union a carrier row per vertex whose m is the vertex's OWN dist
-        # — min(m) is exactly least(dist, min_nbr + 1), covering vertices
-        # with no finite in-neighbor. No broadcast-collect job, no apply
-        # join (BENCH.md f attack).
-        msgs = (
-            edges.join(st_src, "src")
-            .filter(F.col("ds") < _INF)
-            .select(
-                F.col("dst").cast("long").alias("vid"),  # back to the domain type
-                (F.col("ds") + 1).alias("m"),
-                F.lit(None).cast("long").alias("old"),
-            )
-        )
-        carrier = state.select(
-            "vid", F.col("dist").alias("m"), F.col("dist").alias("old")
-        )
-        return msgs.unionByName(carrier).groupBy("vid").agg(
-            F.min("m").alias("dist"), F.max("old").alias("old_dist")
-        )
-
-    res = bsp_loop(
-        spark,
-        init=lambda: graph.vertices().select(
-            "vid",
-            F.when(is_source, F.lit(0)).otherwise(F.lit(_INF)).cast("long").alias("dist"),
-        ),
-        step=step,
-        stat_expr=F.sum((F.col("dist") != F.col("old_dist")).cast("long")),
-        done=lambda changed: changed == 0,
-        restore=lambda df: df.select("vid", "dist"),
-        max_iters=max_rounds,
-        edges_per_iter=E,
-        metric_kind="changed",
-    )
-    edges.unpersist()
-    out = res.state.select(
-        "vid", F.when(F.col("dist") >= _INF, F.lit(-1)).otherwise(F.col("dist")).alias("dist")
-    )
-    return BfsResult(
-        distances=out,
-        rounds=res.iterations,
-        converged=res.converged,
-        changed_per_round=[int(c) for c in res.stats],
-        wall_ms_per_round=res.wall_ms,
-    )
-
-
-class BfsKernel:
-    """Scalar min-monoid GAS form — the same VectorKernel protocol as
-    PageRank/CC (runtime/gas.py): message = dist(src) + 1, fold = min,
-    apply = least(prev, acc). Distances ride as float64 (exact < 2^53)."""
-
-    combine = "min"
-    state_type = "double"
-
-    def __init__(self, sources: list[int]) -> None:
-        self.sources = sorted({int(s) for s in sources})
-
-    def init_expr(self, vid):
-        return F.when(vid.isin(self.sources), F.lit(0.0)).otherwise(F.lit(float(_INF)))
-
-    def scatter_gather(self, src_vals, weights):
-        return src_vals + 1.0  # hop count; edge weights unused
-
-    def apply_expr(self, vid, prev, acc):
-        return F.least(prev, F.coalesce(acc, prev))
+    return _bfs(graph, kernel, DfEdges.cache(edges, V, broadcast_vertices), max_rounds)
 
 
 def bfs_distances_csr(
@@ -138,36 +89,9 @@ def bfs_distances_csr(
     directed: bool = True,
     max_rounds: int = 200,
 ) -> BfsResult:
-    """CSR-block GAS variant: same distances, hoshizora-style execution."""
-    from hoshizora_spark.graph.csr import build_csr_blocks
-    from hoshizora_spark.runtime.gas import gas_step, init_state
-
-    spark = graph.spark
+    """CSR-block engine: same kernel, same distances."""
     V = graph.num_vertices
-    src_set = sorted({int(s) for s in sources})
-    bad = [s for s in src_set if s < 0 or s >= V]
-    if bad:
-        raise ValueError(f"bfs sources outside vertex domain 0..{V - 1}: {bad}")
+    kernel = BfsKernel(dense_sources(sources, V, "bfs"))
     base = graph if directed else Graph(edges=symmetrize(graph.edges), num_vertices=V)
-    csr = build_csr_blocks(base)
-    kernel = BfsKernel(src_set)
+    return _bfs(graph, kernel, build_csr_blocks(base), max_rounds)
 
-    res = bsp_loop(
-        spark,
-        init=lambda: init_state(spark, csr, kernel),
-        step=lambda state, it: gas_step(csr, state, kernel),
-        stat_expr=F.sum((F.col("new_val") != F.col("old_val")).cast("long")),
-        done=lambda changed: changed == 0,
-        restore=lambda df: df.select("vid", F.col("new_val").alias("val"), "block_id"),
-        max_iters=max_rounds,
-        edges_per_iter=csr.num_edges,
-        metric_kind="changed",
-    )
-    out = res.state.select(
-        "vid",
-        F.when(F.col("val") >= float(_INF), F.lit(-1))
-        .otherwise(F.col("val"))
-        .cast("long")
-        .alias("dist"),
-    )
-    return BfsResult(distances=out, rounds=res.iterations, converged=res.converged)

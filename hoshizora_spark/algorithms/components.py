@@ -27,7 +27,9 @@ from hoshizora_spark.graph.core import (
     maybe_broadcast,
     symmetrize,
 )
+from hoshizora_spark.graph.csr import build_csr_blocks
 from hoshizora_spark.runtime.checkpoint import CheckpointManager
+from hoshizora_spark.runtime.gas import VectorKernel, run_kernel
 from hoshizora_spark.runtime.superstep import bsp_loop
 
 
@@ -111,18 +113,16 @@ def connected_components(
     )
 
 
-class MinLabelKernel:
+class MinLabelKernel(VectorKernel):
     """GAS form of min-label propagation (runtime/gas.py, combine='min').
 
     Labels ride as float64 — exact for vertex ids < 2^53, far above the
-    10^12-file domain. Exercises the non-sum monoid path of the kernel
-    runtime; pointer jumping is skipped (plain propagation converges in
-    O(diameter) rounds instead of O(log d) — use ``connected_components``
-    when diameter is large).
+    10^12-file domain. Pointer jumping is not a per-edge message, so this
+    kernel runs plain propagation: O(diameter) rounds instead of
+    O(log d) — use ``connected_components`` when diameter is large.
     """
 
     combine = "min"
-    state_type = "double"
 
     def init_expr(self, vid):
         return vid.cast("double")
@@ -140,32 +140,20 @@ def connected_components_csr(
     checkpoint: CheckpointManager | None = None,
     resume: bool = False,
 ) -> ComponentsResult:
-    """CSR-block GAS variant: same labels, hoshizora-style execution."""
-    from hoshizora_spark.graph.csr import build_csr_blocks
-    from hoshizora_spark.runtime.gas import gas_step, init_state
-
-    spark = graph.spark
+    """CSR-block engine running ``MinLabelKernel``: same labels."""
     sym_graph = Graph(edges=symmetrize(graph.edges), num_vertices=graph.num_vertices)
-    csr = build_csr_blocks(sym_graph)
-    kernel = MinLabelKernel()
-
-    res = bsp_loop(
-        spark,
-        init=lambda: init_state(spark, csr, kernel),
-        step=lambda state, it: gas_step(csr, state, kernel),
-        stat_expr=F.sum((F.col("new_val") != F.col("old_val")).cast("long")),
-        done=lambda changed: changed == 0,
-        restore=lambda df: df.select("vid", F.col("new_val").alias("val"), "block_id"),
+    res = run_kernel(
+        graph,
+        MinLabelKernel(),
+        build_csr_blocks(sym_graph),
         max_iters=max_rounds,
         checkpoint=checkpoint,
         resume=resume,
-        edges_per_iter=csr.num_edges,
-        metric_kind="changed",
     )
     return ComponentsResult(
         labels=res.state.select("vid", F.col("val").cast("long").alias("label")),
         rounds=res.iterations,
         converged=res.converged,
-        changed_per_round=[int(c) for c in res.stats],
+        changed_per_round=res.stats,
         wall_ms_per_round=res.wall_ms,
     )

@@ -295,7 +295,6 @@ def k_core_hindex_csr(graph: Graph, max_rounds: int = 200) -> KCoreResult:
         edges_per_iter=csr.num_edges,
         metric_kind="changed",
     )
-    csr.unpersist()
     coreness = res.state.select("vid", F.col("val").cast("long").alias("coreness"))
     mx = coreness.agg(F.max("coreness")).first()[0]
     return KCoreResult(

@@ -126,7 +126,6 @@ class LabelPropKernel:
 def label_propagation_csr(
     graph: Graph,
     max_rounds: int = 20,
-    broadcast_vertices: int = 200_000,
 ) -> LabelPropResult:
     """CSR-block path for LPA — bit-identical labels to the DF path.
 
@@ -185,7 +184,6 @@ def label_propagation_csr(
         edges_per_iter=csr.num_edges,
         metric_kind="changed",
     )
-    csr.unpersist()
     return LabelPropResult(
         labels=res.state.select("vid", F.col("val").alias("label")),
         rounds=res.iterations,

@@ -15,15 +15,16 @@ Semantics replicated from /root/reference/src/hoshizora/app/pagerank.h:9-51
 The reference runs a fixed ``num_iters`` (default 50, pybind.cpp:14); the
 target rule adds convergence ``max|Δrank| ≤ tol``. Both are supported.
 
-Two physical paths behind one semantic:
+One kernel (``PageRankKernel``), two physical engines (runtime/gas.py
+``run_kernel``):
 
-* ``pagerank``       — pure DataFrame: ranks ⋈ edges → partial+final hash
-  agg on dst → apply-project. Broadcasts the rank side when V is small so
-  the persisted edge table never re-shuffles.
-* ``pagerank_csr``   — CSR-block GAS path (runtime/gas.py): numpy
-  gather-scatter + per-block partial fold inside ``applyInPandas``; the
-  only big exchange per superstep carries ≤ num_blocks rows per distinct
-  dst (inherent skew mitigation for hot vertices).
+* ``pagerank``       — DataFrame engine: ranks ⋈ edges → one union-carrier
+  hash agg on dst → apply-project. Broadcasts the rank side when V is
+  small so the persisted edge table never re-shuffles.
+* ``pagerank_csr``   — CSR-block engine: numpy gather-scatter + per-block
+  partial fold inside ``applyInPandas``; the only big exchange per
+  superstep carries ≤ num_blocks rows per distinct dst (inherent skew
+  mitigation for hot vertices).
 """
 
 from __future__ import annotations
@@ -33,11 +34,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hoshizora_spark.graph.core import Graph, cache_superstep_edges, maybe_broadcast
+from hoshizora_spark.graph.core import Graph
 from hoshizora_spark.graph.csr import CsrBlocks, build_csr_blocks
 from hoshizora_spark.runtime.checkpoint import CheckpointManager
-from hoshizora_spark.runtime.gas import gas_step, init_state
-from hoshizora_spark.runtime.superstep import bsp_loop
+from hoshizora_spark.runtime.gas import DfEdges, VectorKernel, dense_sources, run_kernel
+from hoshizora_spark.runtime.superstep import LoopResult
 
 DAMPING = 0.85
 JUMP = 0.15
@@ -51,6 +52,50 @@ class PageRankResult:
     deltas: list[float] = field(default_factory=list)
     edges_processed_per_iter: int = 0
     wall_ms_per_iter: list[float] = field(default_factory=list)
+
+
+class PageRankKernel(VectorKernel):
+    """GAS form of app/pagerank.h:9-51 (runtime/gas.py)."""
+
+    combine = "sum"
+
+    def __init__(self, num_vertices: int) -> None:
+        self.base = JUMP / num_vertices
+
+    def init_expr(self, vid):
+        return F.lit(1.0)  # pagerank.h:17-20 (NOT 1/N)
+
+    def scatter_gather(self, src_vals, weights):
+        return src_vals * weights  # rank/out_deg per edge entry (pagerank.h:22-24)
+
+    def apply_expr(self, vid, prev, acc):
+        return F.lit(DAMPING) * F.coalesce(acc, F.lit(0.0)) + F.lit(self.base)
+
+
+class PersonalizedPageRankKernel(PageRankKernel):
+    """Teleport-set kernel: random jumps land uniformly on ``sources``
+    instead of the whole domain. Only init and the apply constant differ:
+
+        init rank = 1[v in S]           (mass starts at the seeds)
+        new rank  = 0.85·Σ msgs + 0.15·1[v in S]/|S|
+
+    Seeds are embedded as an ``isin`` literal list — fine for the typical
+    "related to this seed set" query (tens..thousands of seeds); the CSR
+    path caps it well before the literal-expression plan-blowup regime
+    (the IVF-centroid / block-routing trap class)."""
+
+    MAX_SEEDS = 10_000
+
+    def __init__(self, sources: list[int]) -> None:
+        self.base = JUMP / len(sources)
+        self.src_set = sources
+
+    def init_expr(self, vid):
+        return F.when(vid.isin(self.src_set), F.lit(1.0)).otherwise(F.lit(0.0))
+
+    def apply_expr(self, vid, prev, acc):
+        jump = F.when(vid.isin(self.src_set), F.lit(self.base)).otherwise(F.lit(0.0))
+        return F.lit(DAMPING) * F.coalesce(acc, F.lit(0.0)) + jump
 
 
 def _weighted_edges(graph: Graph, weight_col: str | None = None) -> DataFrame:
@@ -74,6 +119,22 @@ def _weighted_edges(graph: Graph, weight_col: str | None = None) -> DataFrame:
     )
 
 
+def _empty(graph: Graph) -> PageRankResult:
+    return PageRankResult(ranks=graph.vertices().withColumn("rank", F.lit(0.0)),
+                          iterations=0, converged=True)
+
+
+def _result(res: LoopResult, num_edges: int) -> PageRankResult:
+    return PageRankResult(
+        ranks=res.state.select("vid", F.col("val").alias("rank")),
+        iterations=res.iterations,
+        converged=res.converged,
+        deltas=res.stats,
+        edges_processed_per_iter=num_edges,
+        wall_ms_per_iter=res.wall_ms,
+    )
+
+
 def pagerank(
     graph: Graph,
     tol: float | None = 1e-6,
@@ -86,20 +147,8 @@ def pagerank(
     num_salts: int = 16,
     hot_keys_df: DataFrame | None = None,
     weight_col: str | None = None,
-    fuse: int = 1,
-    loop_conf: dict[str, str] | None = None,
 ) -> PageRankResult:
-    """Pure-DataFrame path.
-
-    ``loop_conf``: session SQL confs pinned for the loop, restored after
-    (see ``bsp_loop``) — a cluster-specific pinning hook, NOT an AQE-off
-    switch: the AQE-off hypothesis was measured and REFUTED (BENCH.md
-    round 4 — AQE-on won all 8 paired comparisons at V=200k/E=128M).
-
-    ``fuse`` (experimental): supersteps per lineage cut / convergence
-    check (see ``bsp_loop``). Same fixed point modulo float-sum reorder
-    (~1e-12); amortizes per-job driver latency when supersteps are
-    overhead-bound. A tol run may overshoot by ≤ fuse-1 supersteps.
+    """DataFrame-engine path.
 
     ``broadcast_vertices``: if V is at or below this, the rank table is
     broadcast into the message join so the (persisted, pre-partitioned)
@@ -120,21 +169,9 @@ def pagerank(
     ``hot_keys_from_degrees``) to the snapshot run's salting decisions.
     Same shuffle-regime gate as ``salt_hot_degree``.
     """
-    spark = graph.spark
     V = graph.num_vertices
     if V == 0:
-        return PageRankResult(ranks=graph.vertices().withColumn("rank", F.lit(0.0)),
-                              iterations=0, converged=True)
-    base = JUMP / V
-
-    ew = _weighted_edges(graph, weight_col)
-    num_msg_edges = ew.count()  # distinct (src,dst) pairs carried per superstep
-    # Persist the static side once; every superstep reuses it. On a cluster this
-    # is the analogue of the reference's one-time CSR build (core/graph.h:439-547).
-    # int-compacted + src-sorted: the per-superstep cache scan is the loop's
-    # memory-bus bill (BENCH.md f + W/cores fit) — see cache_superstep_edges.
-    ew, key_type = cache_superstep_edges(spark, ew, V, num_msg_edges)
-
+        return _empty(graph)
     hot = None
     if V > broadcast_vertices and (salt_hot_degree is not None or hot_keys_df is not None):
         if hot_keys_df is not None:
@@ -144,88 +181,22 @@ def pagerank(
 
             hot = hot_keys(graph.edges, "src", salt_hot_degree).persist()
         hot.count()
-
-    def step(ranks: DataFrame, it: int) -> DataFrame:
-        rank_src = ranks.select(F.col("vid").cast(key_type).alias("src"), "rank")
-        if hot is not None:
-            from hoshizora_spark.runtime.skew import salted_join_edges_state
-
-            joined = salted_join_edges_state(ew, rank_src, "src", hot, num_salts)
-        else:
-            joined = ew.join(maybe_broadcast(rank_src, V, broadcast_vertices), "src")
-        # fold the apply join INTO the message aggregation: per-edge
-        # messages union a NULL-message carrier row per vertex, one
-        # groupBy(vid) computes both sum(m) (NULL when no in-message — the
-        # old left-join-miss case) and max(old) (exactly one non-null per
-        # vid). Replaces { agg exchange + broadcast-collect job + apply
-        # join } with ONE agg exchange carrying V extra rows — one fewer
-        # driver job and join per superstep (the BENCH.md f attack), same
-        # message multiset so the fixed point is unchanged.
-        msgs = joined.select(
-            F.col("dst").cast("long").alias("vid"),  # back to the domain type
-            (F.col("rank") * F.col("w")).alias("m"),
-            F.lit(None).cast("double").alias("old"),
-        )
-        carrier = ranks.select(
-            "vid", F.lit(None).cast("double").alias("m"), F.col("rank").alias("old")
-        )
-        agg = msgs.unionByName(carrier).groupBy("vid").agg(
-            F.sum("m").alias("acc"), F.max("old").alias("old_rank")
-        )
-        return agg.select(
-            "vid",
-            (F.lit(DAMPING) * F.coalesce(F.col("acc"), F.lit(0.0)) + F.lit(base)).alias(
-                "new_rank"
-            ),
-            "old_rank",
-        )
-
-    res = bsp_loop(
-        spark,
-        init=lambda: graph.vertices().withColumn("rank", F.lit(1.0)),
-        step=step,
-        stat_expr=F.max(F.abs(F.col("new_rank") - F.col("old_rank"))),
-        done=lambda d: tol is not None and d <= tol,
-        restore=lambda df: df.select("vid", F.col("new_rank").alias("rank")),
+    # Persist the static side once; every superstep reuses it. On a cluster this
+    # is the analogue of the reference's one-time CSR build (core/graph.h:439-547).
+    ef = DfEdges.cache(
+        _weighted_edges(graph, weight_col), V, broadcast_vertices, hot, num_salts
+    )
+    res = run_kernel(
+        graph,
+        PageRankKernel(V),
+        ef,
+        tol=tol,
         max_iters=max_iters,
         checkpoint=checkpoint,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        edges_per_iter=num_msg_edges,
-        metric_kind="delta",
-        fuse=fuse,
-        loop_conf=loop_conf,
     )
-    ew.unpersist()
-    if hot is not None:
-        hot.unpersist()
-    return PageRankResult(
-        ranks=res.state,
-        iterations=res.iterations,
-        converged=res.converged,
-        deltas=res.stats,
-        edges_processed_per_iter=num_msg_edges,
-        wall_ms_per_iter=res.wall_ms,
-    )
-
-
-class PageRankKernel:
-    """GAS form of app/pagerank.h:9-51, vectorized (runtime/gas.py)."""
-
-    combine = "sum"
-    state_type = "double"
-
-    def __init__(self, num_vertices: int) -> None:
-        self.base = JUMP / num_vertices
-
-    def init_expr(self, vid):
-        return F.lit(1.0)  # pagerank.h:17-20 (NOT 1/N)
-
-    def scatter_gather(self, src_vals, weights):
-        return src_vals * weights  # rank/out_deg per edge entry (pagerank.h:22-24)
-
-    def apply_expr(self, vid, prev, acc):
-        return F.lit(DAMPING) * F.coalesce(acc, F.lit(0.0)) + F.lit(self.base)
+    return _result(res, ef.num_edges)
 
 
 def pagerank_csr(
@@ -237,52 +208,30 @@ def pagerank_csr(
     checkpoint_every: int = 1,
     resume: bool = False,
     weight_col: str | None = None,
-    fuse: int = 1,
-    loop_conf: dict[str, str] | None = None,
 ) -> PageRankResult:
-    """CSR-block GAS path — same fixed point, hoshizora-style execution.
+    """CSR-block engine path — same kernel, hoshizora-style execution.
 
     ``weight_col``: edge-weight column (reference ``e_props``); the CSR
     build stores src-normalized real weights so the weighted fixed point
     matches ``pagerank(..., weight_col=...)`` exactly. Ignored when a
     pre-built ``csr`` is passed (its weights are already baked in).
     """
-    spark = graph.spark
     V = graph.num_vertices
     if V == 0:
-        return PageRankResult(ranks=graph.vertices().withColumn("rank", F.lit(0.0)),
-                              iterations=0, converged=True)
-    own_csr = csr is None
+        return _empty(graph)
     if csr is None:
         csr = build_csr_blocks(graph, weight_col=weight_col)
-    kernel = PageRankKernel(V)
-
-    res = bsp_loop(
-        spark,
-        init=lambda: init_state(spark, csr, kernel),
-        step=lambda state, it: gas_step(csr, state, kernel),
-        stat_expr=F.max(F.abs(F.col("new_val") - F.col("old_val"))),
-        done=lambda d: tol is not None and d <= tol,
-        restore=lambda df: df.select("vid", F.col("new_val").alias("val"), "block_id"),
+    res = run_kernel(
+        graph,
+        PageRankKernel(V),
+        csr,
+        tol=tol,
         max_iters=max_iters,
         checkpoint=checkpoint,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        edges_per_iter=csr.num_edges,
-        metric_kind="delta",
-        fuse=fuse,
-        loop_conf=loop_conf,
     )
-    if own_csr:
-        csr.unpersist()
-    return PageRankResult(
-        ranks=res.state.select("vid", F.col("val").alias("rank")),
-        iterations=res.iterations,
-        converged=res.converged,
-        deltas=res.stats,
-        edges_processed_per_iter=csr.num_edges,
-        wall_ms_per_iter=res.wall_ms,
-    )
+    return _result(res, csr.num_edges)
 
 
 def personalized_pagerank(
@@ -292,108 +241,19 @@ def personalized_pagerank(
     max_iters: int = 200,
     broadcast_vertices: int = 200_000,
 ) -> PageRankResult:
-    """Teleport-set PageRank: random jumps land uniformly on ``sources``
-    instead of the whole domain — the standard "related files to this
-    seed set" query on a dependency graph. Same message plan as
-    ``pagerank``; only init and the apply constant differ:
-
-        init rank = 1[v in S]           (mass starts at the seeds)
-        new rank  = 0.85·Σ msgs + 0.15·1[v in S]/|S|
-
-    Mass leaks at sinks exactly like the base semantics (§2.4 #5).
-    """
-    spark = graph.spark
+    """Teleport-set PageRank (``PersonalizedPageRankKernel``) on the
+    DataFrame engine — the standard "related files to this seed set" query
+    on a dependency graph. Mass leaks at sinks exactly like the base
+    semantics (§2.4 #5)."""
     V = graph.num_vertices
     if V == 0 or not sources:
-        return PageRankResult(ranks=graph.vertices().withColumn("rank", F.lit(0.0)),
-                              iterations=0, converged=True)
-    src_set = sorted({int(s) for s in sources})
-    bad = [s for s in src_set if s < 0 or s >= V]
-    if bad:
-        # out-of-domain seeds would silently inflate |S| (base = 0.15/|S|)
-        # while never receiving teleport mass — every rank biases low
-        raise ValueError(
-            f"personalized_pagerank sources outside vertex domain 0..{V - 1}: {bad}"
-        )
-    base = JUMP / len(src_set)
-    is_source = F.col("vid").isin(src_set)
-
-    ew = _weighted_edges(graph)
-    num_msg_edges = ew.count()
-    # same int-compact + src-sort cache layout as `pagerank`
-    ew, key_type = cache_superstep_edges(spark, ew, V, num_msg_edges)
-
-    def step(ranks: DataFrame, it: int) -> DataFrame:
-        # same union-agg superstep as `pagerank` (one agg, no apply join);
-        # only the teleport term differs — it is a function of vid, so it
-        # applies cleanly on the agg output.
-        rank_src = maybe_broadcast(
-            ranks.select(F.col("vid").cast(key_type).alias("src"), "rank"),
-            V,
-            broadcast_vertices,
-        )
-        msgs = ew.join(rank_src, "src").select(
-            F.col("dst").cast("long").alias("vid"),
-            (F.col("rank") * F.col("w")).alias("m"),
-            F.lit(None).cast("double").alias("old"),
-        )
-        carrier = ranks.select(
-            "vid", F.lit(None).cast("double").alias("m"), F.col("rank").alias("old")
-        )
-        agg = msgs.unionByName(carrier).groupBy("vid").agg(
-            F.sum("m").alias("acc"), F.max("old").alias("old_rank")
-        )
-        jump = F.when(is_source, F.lit(base)).otherwise(F.lit(0.0))
-        return agg.select(
-            "vid",
-            (F.lit(DAMPING) * F.coalesce(F.col("acc"), F.lit(0.0)) + jump).alias("new_rank"),
-            "old_rank",
-        )
-
-    res = bsp_loop(
-        spark,
-        init=lambda: graph.vertices().withColumn(
-            "rank", F.when(is_source, F.lit(1.0)).otherwise(F.lit(0.0))
-        ),
-        step=step,
-        stat_expr=F.max(F.abs(F.col("new_rank") - F.col("old_rank"))),
-        done=lambda d: tol is not None and d <= tol,
-        restore=lambda df: df.select("vid", F.col("new_rank").alias("rank")),
-        max_iters=max_iters,
-        edges_per_iter=num_msg_edges,
-        metric_kind="delta",
-    )
-    ew.unpersist()
-    return PageRankResult(
-        ranks=res.state,
-        iterations=res.iterations,
-        converged=res.converged,
-        deltas=res.stats,
-        edges_processed_per_iter=num_msg_edges,
-        wall_ms_per_iter=res.wall_ms,
-    )
-
-
-class PersonalizedPageRankKernel(PageRankKernel):
-    """Teleport-set GAS kernel: both personalization hooks (seed init, seed
-    jump term) are pure Column-of-vid expressions, so they slot into the
-    VectorKernel protocol unchanged. Seeds are embedded as an ``isin``
-    literal list — fine for the typical "related to this seed set" query
-    (tens..thousands of seeds); capped well before the literal-expression
-    plan-blowup regime (the IVF-centroid / block-routing trap class)."""
-
-    MAX_SEEDS = 10_000
-
-    def __init__(self, sources: list[int], num_vertices: int) -> None:
-        self.base = JUMP / len(sources)
-        self.src_set = sources
-
-    def init_expr(self, vid):
-        return F.when(vid.isin(self.src_set), F.lit(1.0)).otherwise(F.lit(0.0))
-
-    def apply_expr(self, vid, prev, acc):
-        jump = F.when(vid.isin(self.src_set), F.lit(self.base)).otherwise(F.lit(0.0))
-        return F.lit(DAMPING) * F.coalesce(acc, F.lit(0.0)) + jump
+        return _empty(graph)
+    # out-of-domain seeds would silently inflate |S| (base = 0.15/|S|)
+    # while never receiving teleport mass — every rank biases low
+    kernel = PersonalizedPageRankKernel(dense_sources(sources, V, "personalized_pagerank"))
+    ef = DfEdges.cache(_weighted_edges(graph), V, broadcast_vertices)
+    res = run_kernel(graph, kernel, ef, tol=tol, max_iters=max_iters)
+    return _result(res, ef.num_edges)
 
 
 def personalized_pagerank_csr(
@@ -403,54 +263,25 @@ def personalized_pagerank_csr(
     tol: float | None = 1e-6,
     max_iters: int = 200,
 ) -> PageRankResult:
-    """Teleport-set PageRank on the CSR fast path — same fixed point as
-    ``personalized_pagerank``, same one-job superstep as ``pagerank_csr``
-    (the teleport term is applied in the fused apply expression on the agg
-    output). Seed sets larger than ``PersonalizedPageRankKernel.MAX_SEEDS``
-    should use the DataFrame path, whose teleport term can join a seed
-    frame instead of embedding literals."""
-    spark = graph.spark
+    """Teleport-set PageRank on the CSR engine — same kernel and fixed
+    point as ``personalized_pagerank``. Seed sets larger than
+    ``PersonalizedPageRankKernel.MAX_SEEDS`` should use the DataFrame
+    path."""
     V = graph.num_vertices
     if V == 0 or not sources:
-        return PageRankResult(ranks=graph.vertices().withColumn("rank", F.lit(0.0)),
-                              iterations=0, converged=True)
-    src_set = sorted({int(s) for s in sources})
-    bad = [s for s in src_set if s < 0 or s >= V]
-    if bad:
-        raise ValueError(
-            f"personalized_pagerank_csr sources outside vertex domain 0..{V - 1}: {bad}"
-        )
+        return _empty(graph)
+    src_set = dense_sources(sources, V, "personalized_pagerank_csr")
     if len(src_set) > PersonalizedPageRankKernel.MAX_SEEDS:
         raise ValueError(
             f"{len(src_set)} seeds would embed as plan literals; use "
             "personalized_pagerank (DataFrame path) for large seed sets"
         )
-    own_csr = csr is None
     if csr is None:
         csr = build_csr_blocks(graph)
-    kernel = PersonalizedPageRankKernel(src_set, V)
-
-    res = bsp_loop(
-        spark,
-        init=lambda: init_state(spark, csr, kernel),
-        step=lambda state, it: gas_step(csr, state, kernel),
-        stat_expr=F.max(F.abs(F.col("new_val") - F.col("old_val"))),
-        done=lambda d: tol is not None and d <= tol,
-        restore=lambda df: df.select("vid", F.col("new_val").alias("val"), "block_id"),
-        max_iters=max_iters,
-        edges_per_iter=csr.num_edges,
-        metric_kind="delta",
+    res = run_kernel(
+        graph, PersonalizedPageRankKernel(src_set), csr, tol=tol, max_iters=max_iters
     )
-    if own_csr:
-        csr.unpersist()
-    return PageRankResult(
-        ranks=res.state.select("vid", F.col("val").alias("rank")),
-        iterations=res.iterations,
-        converged=res.converged,
-        deltas=res.stats,
-        edges_processed_per_iter=csr.num_edges,
-        wall_ms_per_iter=res.wall_ms,
-    )
+    return _result(res, csr.num_edges)
 
 
 def top_k(ranks: DataFrame, k: int = 10) -> DataFrame:

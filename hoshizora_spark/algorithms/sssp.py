@@ -5,20 +5,19 @@ WIP, /root/reference/README.md:67) but the natural weighted companion to
 ``bfs_distances``: dist(v) = minimum total edge weight over paths from the
 nearest source; unreachable vertices report -1. Deterministic, exact.
 
-Same one-job superstep shape as BFS (algorithms/bfs.py): per round one
-edge⋈state join producing per-edge candidates ``dist(src) + w``, unioned
-with a carrier row per vertex (its own current dist), folded by a single
-``groupBy(vid).agg(min)`` — relax + apply in one shuffle, no apply join.
+Same min-monoid kernel as BFS (algorithms/bfs.py) with message
+``dist(src) + w``, run by runtime/gas.py ``run_kernel`` on either engine:
+per round one edge⋈state join producing per-edge candidates, folded with
+the apply by a single ``groupBy(vid).agg(min)`` — one shuffle.
 Rounds = number of edges on the longest shortest path (≤ V-1), so on
 small-diameter link graphs this converges in tens of supersteps at any
 scale. Weights must be non-negative (standard Bellman-Ford relaxation
 converges for negative weights too if no negative cycle is reachable, but
 the -1 sentinel and the round bound are only meaningful for w ≥ 0).
 
-The CSR path reuses the scalar min-monoid ``VectorKernel`` protocol with
-``scatter_gather = src_vals + weights`` — the CSR blocks store the RAW
-edge weights (``build_csr_blocks(..., normalize_weights=False)``), unlike
-weighted PageRank's src-normalized ones.
+The CSR blocks store the RAW edge weights
+(``build_csr_blocks(..., normalize_weights=False)``), unlike weighted
+PageRank's src-normalized ones.
 """
 
 from __future__ import annotations
@@ -28,10 +27,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hoshizora_spark.graph.core import Graph, cache_superstep_edges, maybe_broadcast
-from hoshizora_spark.runtime.superstep import bsp_loop
-
-_INF = float(2**62)  # sentinel; never survives into the output
+from hoshizora_spark.algorithms.bfs import _INF, BfsKernel
+from hoshizora_spark.graph.core import Graph
+from hoshizora_spark.graph.csr import build_csr_blocks
+from hoshizora_spark.runtime.gas import DfEdges, dense_sources, run_kernel
 
 
 @dataclass
@@ -41,6 +40,14 @@ class SsspResult:
     converged: bool
     changed_per_round: list[int] = field(default_factory=list)
     wall_ms_per_round: list[float] = field(default_factory=list)
+
+
+class SsspKernel(BfsKernel):
+    """BFS's min-monoid kernel with message = dist(src) + w. On the CSR
+    engine it requires blocks built with ``normalize_weights=False``."""
+
+    def scatter_gather(self, src_vals, weights):
+        return src_vals + weights
 
 
 def _weighted_edge_view(graph: Graph, weight_col: str, directed: bool) -> DataFrame:
@@ -60,14 +67,16 @@ def _weighted_edge_view(graph: Graph, weight_col: str, directed: bool) -> DataFr
     )
 
 
-def _check_sources(sources: list[int], num_vertices: int) -> list[int]:
-    src_set = sorted({int(s) for s in sources})
-    bad = [s for s in src_set if s < 0 or s >= num_vertices]
-    if bad:
-        raise ValueError(
-            f"sssp sources outside vertex domain 0..{num_vertices - 1}: {bad}"
-        )
-    return src_set
+def _sssp(graph, kernel, edges, max_rounds) -> SsspResult:
+    res = run_kernel(graph, kernel, edges, max_iters=max_rounds)
+    dist = F.when(F.col("val") >= _INF, F.lit(-1.0)).otherwise(F.col("val"))
+    return SsspResult(
+        distances=res.state.select("vid", dist.alias("dist")),
+        rounds=res.iterations,
+        converged=res.converged,
+        changed_per_round=res.stats,
+        wall_ms_per_round=res.wall_ms,
+    )
 
 
 def sssp_distances(
@@ -78,93 +87,10 @@ def sssp_distances(
     max_rounds: int = 200,
     broadcast_vertices: int = 200_000,
 ) -> SsspResult:
-    spark = graph.spark
     V = graph.num_vertices
-    src_set = _check_sources(sources, V)
-    edges = _weighted_edge_view(graph, weight_col, directed)
-    E = edges.count()
-    # int-compacted + src-sorted per-round scan (see cache_superstep_edges;
-    # the w column rides along untouched)
-    edges, key_type = cache_superstep_edges(spark, edges, V, E)
-    is_source = F.col("vid").isin(src_set)
-
-    def step(state: DataFrame, it: int) -> DataFrame:
-        st_src = maybe_broadcast(
-            state.select(
-                F.col("vid").cast(key_type).alias("src"), F.col("dist").alias("ds")
-            ),
-            V,
-            broadcast_vertices,
-        )
-        # relax + apply in ONE groupBy(vid): per-edge candidates (ds + w)
-        # union a carrier row per vertex whose m is the vertex's OWN dist
-        # — min(m) is exactly least(dist, min over in-edges of ds + w).
-        msgs = (
-            edges.join(st_src, "src")
-            .filter(F.col("ds") < _INF)
-            .select(
-                F.col("dst").cast("long").alias("vid"),
-                (F.col("ds") + F.col("w")).alias("m"),
-                F.lit(None).cast("double").alias("old"),
-            )
-        )
-        carrier = state.select(
-            "vid", F.col("dist").alias("m"), F.col("dist").alias("old")
-        )
-        return msgs.unionByName(carrier).groupBy("vid").agg(
-            F.min("m").alias("dist"), F.max("old").alias("old_dist")
-        )
-
-    res = bsp_loop(
-        spark,
-        init=lambda: graph.vertices().select(
-            "vid",
-            F.when(is_source, F.lit(0.0))
-            .otherwise(F.lit(_INF))
-            .cast("double")
-            .alias("dist"),
-        ),
-        step=step,
-        stat_expr=F.sum((F.col("dist") != F.col("old_dist")).cast("long")),
-        done=lambda changed: changed == 0,
-        restore=lambda df: df.select("vid", "dist"),
-        max_iters=max_rounds,
-        edges_per_iter=E,
-        metric_kind="changed",
-    )
-    edges.unpersist()
-    out = res.state.select(
-        "vid",
-        F.when(F.col("dist") >= _INF, F.lit(-1.0)).otherwise(F.col("dist")).alias("dist"),
-    )
-    return SsspResult(
-        distances=out,
-        rounds=res.iterations,
-        converged=res.converged,
-        changed_per_round=[int(c) for c in res.stats],
-        wall_ms_per_round=res.wall_ms,
-    )
-
-
-class SsspKernel:
-    """Scalar min-monoid GAS form (runtime/gas.py VectorKernel): message =
-    dist(src) + w, fold = min, apply = least(prev, acc). Requires CSR
-    blocks built with ``normalize_weights=False`` (raw weights)."""
-
-    combine = "min"
-    state_type = "double"
-
-    def __init__(self, sources: list[int]) -> None:
-        self.sources = sorted({int(s) for s in sources})
-
-    def init_expr(self, vid):
-        return F.when(vid.isin(self.sources), F.lit(0.0)).otherwise(F.lit(_INF))
-
-    def scatter_gather(self, src_vals, weights):
-        return src_vals + weights
-
-    def apply_expr(self, vid, prev, acc):
-        return F.least(prev, F.coalesce(acc, prev))
+    kernel = SsspKernel(dense_sources(sources, V, "sssp"))
+    ef = DfEdges.cache(_weighted_edge_view(graph, weight_col, directed), V, broadcast_vertices)
+    return _sssp(graph, kernel, ef, max_rounds)
 
 
 def sssp_distances_csr(
@@ -174,13 +100,9 @@ def sssp_distances_csr(
     directed: bool = True,
     max_rounds: int = 200,
 ) -> SsspResult:
-    """CSR-block GAS variant: same distances, hoshizora-style execution."""
-    from hoshizora_spark.graph.csr import build_csr_blocks
-    from hoshizora_spark.runtime.gas import gas_step, init_state
-
-    spark = graph.spark
+    """CSR-block engine: same kernel, same distances."""
     V = graph.num_vertices
-    src_set = _check_sources(sources, V)
+    kernel = SsspKernel(dense_sources(sources, V, "sssp"))
     base = Graph(
         edges=_weighted_edge_view(graph, weight_col, directed).withColumnRenamed(
             "w", weight_col
@@ -188,21 +110,5 @@ def sssp_distances_csr(
         num_vertices=V,
     )
     csr = build_csr_blocks(base, weight_col=weight_col, normalize_weights=False)
-    kernel = SsspKernel(src_set)
+    return _sssp(graph, kernel, csr, max_rounds)
 
-    res = bsp_loop(
-        spark,
-        init=lambda: init_state(spark, csr, kernel),
-        step=lambda state, it: gas_step(csr, state, kernel),
-        stat_expr=F.sum((F.col("new_val") != F.col("old_val")).cast("long")),
-        done=lambda changed: changed == 0,
-        restore=lambda df: df.select("vid", F.col("new_val").alias("val"), "block_id"),
-        max_iters=max_rounds,
-        edges_per_iter=csr.num_edges,
-        metric_kind="changed",
-    )
-    out = res.state.select(
-        "vid",
-        F.when(F.col("val") >= _INF, F.lit(-1.0)).otherwise(F.col("val")).alias("dist"),
-    )
-    return SsspResult(distances=out, rounds=res.iterations, converged=res.converged)

@@ -200,9 +200,6 @@ class CsrBlocks:
             "indices array<long>, weights array<double>",
         )
 
-    def unpersist(self) -> None:  # kept for API symmetry; sidecar stays on disk
-        pass
-
 
 def edge_balanced_bounds(edges: DataFrame, num_vertices: int, num_blocks: int) -> list[int]:
     """Split points so each block holds ≈ E/num_blocks edge entries.

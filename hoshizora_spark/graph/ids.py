@@ -10,7 +10,11 @@ row_number (that funnels every row through one partition). Instead:
   3. id = cumulative offset of my partition + local row_number
 
 Step 3's window partitions by spark_partition_id, so each window group is
-exactly one (already sorted) partition — no second exchange.
+exactly one (already sorted) partition. The range-partitioned frame is
+materialized once (eager ``localCheckpoint``) before steps 2 and 3:
+``repartitionByRange`` samples its bounds per execution, so two separate
+executions could cut different ranges and hand out repeated or
+out-of-domain ids.
 """
 
 from __future__ import annotations
@@ -30,7 +34,7 @@ def assign_dense_ids(
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     keyed = df.select(*key_cols).distinct()
     ranged = keyed.repartitionByRange(n_part, *key_cols).sortWithinPartitions(*key_cols)
-    ranged = ranged.withColumn("_pid", F.spark_partition_id())
+    ranged = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=True)
     counts = {
         r["_pid"]: r["cnt"]
         for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()

@@ -34,10 +34,16 @@ The per-block partial fold is the distributed replacement for the
 reference's ``forward_indices`` static permutation (graph.h:354-388): the
 exchange delivers messages pre-grouped by dst, Spark's shuffle plays the
 role of the permutation.
+
+The same scalar kernel also compiles to a pure-DataFrame superstep
+(``df_step``: edges ⋈ state, message Column, one union-carrier groupBy),
+and ``run_kernel`` drives either engine through ``bsp_loop`` — an
+algorithm is "prepare the edge view + build the kernel + run".
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Protocol
 
 import numpy as np
@@ -45,13 +51,23 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hoshizora_spark.graph.core import Graph, cache_superstep_edges, maybe_broadcast
 from hoshizora_spark.graph.csr import CsrBlocks
+from hoshizora_spark.runtime.checkpoint import CheckpointManager
+from hoshizora_spark.runtime.skew import salted_join_edges_state
+from hoshizora_spark.runtime.superstep import LoopResult, bsp_loop
 
 _COMBINES = {"sum": F.sum, "min": F.min, "max": F.max}
 
 
-class VectorKernel(Protocol):
-    """Vectorized GAS kernel (numpy in, numpy out). Mirrors core/kernel.h.
+class VectorKernel:
+    """Scalar-monoid GAS kernel. Mirrors core/kernel.h.
+
+    The per-edge message ``scatter_gather`` is plain arithmetic, so the same
+    method body runs on both engines: numpy arrays over a CSR block's
+    dst-sorted edges (``gas_step``) and Catalyst Columns over the joined
+    edge rows (``df_step``). ``init_expr`` / ``apply_expr`` are Column
+    expressions used by both; ``sends`` prunes the DF engine's join.
 
     Parity note — ``gather``'s ``prev_val`` (kernel.h:17-18): the reference
     hands gather the edge's *previous-superstep* EData from a persistent
@@ -66,21 +82,27 @@ class VectorKernel(Protocol):
     """
 
     combine: str  # 'sum' | 'min' | 'max' — the zero+sum monoid
-    state_type: str  # Spark type of the vertex state column, e.g. 'double'
+    state_type = "double"  # Spark type of the vertex state column
 
     def init_expr(self, vid: Column) -> Column:
         """Iteration-0 state (kernel.h:12 ``init``)."""
-        ...
+        raise NotImplementedError
 
-    def scatter_gather(self, src_vals: np.ndarray, weights: np.ndarray) -> np.ndarray:
+    def scatter_gather(self, src_vals, weights):
         """Per-edge message from gathered src state (kernel.h:14-18
         ``scatter``+``gather`` fused — both are per-edge maps)."""
-        ...
+        raise NotImplementedError
 
     def apply_expr(self, vid: Column, prev: Column, acc: Column) -> Column:
         """New state from (prev, folded acc); acc is NULL when no message
         arrived (kernel.h:20-26 ``zero``/``apply``)."""
-        ...
+        raise NotImplementedError
+
+    def sends(self, src_val: Column) -> Column | None:
+        """Predicate on src state for edges worth joining on the DF engine
+        (None = every edge sends). Pure pruning: a dropped message must not
+        change the fold's result."""
+        return None
 
 
 def _partial_fold(combine: str, msgs_sorted: np.ndarray, starts: np.ndarray) -> np.ndarray:
@@ -323,12 +345,7 @@ def gas_gain_argmax(
     )
 
 
-def gas_step(
-    csr: CsrBlocks,
-    state: DataFrame,
-    kernel: VectorKernel,
-    broadcast_vertices: int = 200_000,  # kept for API compat; no longer used
-) -> DataFrame:
+def gas_step(csr: CsrBlocks, state: DataFrame, kernel: VectorKernel) -> DataFrame:
     """One full superstep: returns (vid, block_id, new_val, old_val).
 
     The apply join is folded INTO the final cross-block fold: block
@@ -375,3 +392,156 @@ def init_state(spark, csr: CsrBlocks, kernel: VectorKernel) -> DataFrame:
         kernel.init_expr(F.col("id")).cast(kernel.state_type).alias("val"),
         csr.block_id_of(F.col("id")).alias("block_id"),
     )
+
+
+@dataclass
+class DfEdges:
+    """The DataFrame engine's static edge operand: the cached (src, dst[, w])
+    view a kernel's supersteps scan, in ``cache_superstep_edges`` layout.
+
+    ``hot``: an optional persisted (src) frame of skewed sources; when set,
+    the state join is the salted one (runtime/skew.py) instead of the
+    broadcast / shuffle-hash join.
+    """
+
+    edges: DataFrame
+    key_type: str  # 'int' | 'long' — cast the state's vid to this to join
+    num_vertices: int
+    num_edges: int
+    broadcast_vertices: int = 200_000
+    hot: DataFrame | None = None
+    num_salts: int = 16
+
+    @staticmethod
+    def cache(
+        edges: DataFrame,
+        num_vertices: int,
+        broadcast_vertices: int = 200_000,
+        hot: DataFrame | None = None,
+        num_salts: int = 16,
+    ) -> "DfEdges":
+        E = edges.count()
+        cached, key_type = cache_superstep_edges(
+            edges.sparkSession, edges, num_vertices, E
+        )
+        return DfEdges(cached, key_type, num_vertices, E, broadcast_vertices, hot, num_salts)
+
+    def unpersist(self) -> None:
+        self.edges.unpersist()
+        if self.hot is not None:
+            self.hot.unpersist()
+
+
+def df_step(ef: DfEdges, state: DataFrame, kernel: VectorKernel) -> DataFrame:
+    """One DataFrame-engine superstep: returns (vid, new_val, old_val).
+
+    The same kernel as ``gas_step``, compiled to Catalyst: one
+    edges ⋈ state→src join, ``scatter_gather`` on Columns as the message,
+    and the apply folded into the message aggregation — per-edge messages
+    union a NULL-message carrier row per vertex, and one groupBy(vid)
+    computes both the monoid fold (NULL when no in-message) and
+    ``max(old)`` (exactly one non-null per vid). No broadcast-collect job,
+    no apply join.
+    """
+    st = state.select(F.col("vid").cast(ef.key_type).alias("src"), F.col("val").alias("sv"))
+    if ef.hot is not None:
+        joined = salted_join_edges_state(ef.edges, st, "src", ef.hot, ef.num_salts)
+    else:
+        joined = ef.edges.join(maybe_broadcast(st, ef.num_vertices, ef.broadcast_vertices), "src")
+    send = kernel.sends(F.col("sv"))
+    if send is not None:
+        joined = joined.filter(send)
+    w = F.col("w") if "w" in ef.edges.columns else F.lit(1.0)
+    msgs = joined.select(
+        F.col("dst").cast("long").alias("vid"),  # back to the domain type
+        kernel.scatter_gather(F.col("sv"), w).alias("m"),
+        F.lit(None).cast(kernel.state_type).alias("old"),
+    )
+    carrier = state.select(
+        "vid", F.lit(None).cast("double").alias("m"), F.col("val").alias("old")
+    )
+    agg = _COMBINES[kernel.combine]
+    folded = msgs.unionByName(carrier).groupBy("vid").agg(
+        agg("m").alias("acc"), F.max("old").alias("old_val")
+    )
+    return folded.select(
+        "vid",
+        kernel.apply_expr(F.col("vid"), F.col("old_val"), F.col("acc")).alias("new_val"),
+        "old_val",
+    )
+
+
+def dense_sources(sources: list[int], num_vertices: int, what: str) -> list[int]:
+    """Sorted distinct seed ids; raises if any lies outside ``0..V-1``."""
+    src_set = sorted({int(s) for s in sources})
+    bad = [s for s in src_set if s < 0 or s >= num_vertices]
+    if bad:
+        raise ValueError(
+            f"{what} sources outside vertex domain 0..{num_vertices - 1}: {bad}"
+        )
+    return src_set
+
+
+def run_kernel(
+    graph: Graph,
+    kernel: VectorKernel,
+    edges: DfEdges | CsrBlocks,
+    *,
+    tol: float | None = None,
+    max_iters: int,
+    checkpoint: CheckpointManager | None = None,
+    checkpoint_every: int = 1,
+    resume: bool = False,
+) -> LoopResult:
+    """Run ``kernel`` to convergence on either engine; state comes back as
+    (vid, val). ``edges`` picks the engine: ``DfEdges`` → ``df_step``
+    (released after the loop), ``CsrBlocks`` → ``gas_step``.
+
+    The convergence statistic follows the monoid: a sum fold converges
+    numerically (max|Δ| ≤ ``tol``; ``tol=None`` runs ``max_iters``), while
+    min/max folds are monotone and stop at the exact fixpoint (no vertex
+    changed; ``tol`` is unused).
+    """
+    spark = graph.spark
+    csr = isinstance(edges, CsrBlocks)
+
+    def init() -> DataFrame:
+        if csr:
+            return init_state(spark, edges, kernel)
+        return graph.vertices().select(
+            "vid", kernel.init_expr(F.col("vid")).cast(kernel.state_type).alias("val")
+        )
+
+    def step(state: DataFrame, it: int) -> DataFrame:
+        return gas_step(edges, state, kernel) if csr else df_step(edges, state, kernel)
+
+    new, old = F.col("new_val"), F.col("old_val")
+    if kernel.combine == "sum":
+        kind, stat_expr = "delta", F.max(F.abs(new - old))
+    else:
+        kind, stat_expr = "changed", F.sum((new != old).cast("long"))
+
+    def done(s: float) -> bool:
+        return s == 0 if kind == "changed" else tol is not None and s <= tol
+
+    keep = ("block_id",) if csr else ()
+    res = bsp_loop(
+        spark,
+        init=init,
+        step=step,
+        stat_expr=stat_expr,
+        done=done,
+        restore=lambda df: df.select("vid", new.alias("val"), *keep),
+        max_iters=max_iters,
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        resume=resume,
+        edges_per_iter=edges.num_edges,
+        metric_kind=kind,
+    )
+    if not csr:
+        edges.unpersist()
+    if kind == "changed":
+        res.stats = [int(c) for c in res.stats]
+    res.state = res.state.select("vid", "val")
+    return res

@@ -45,14 +45,12 @@ def bsp_loop(
     resume: bool = False,
     edges_per_iter: int = -1,
     metric_kind: str = "delta",  # 'delta' -> max_abs_delta slot, 'changed' -> changed slot
-    fuse: int = 1,
-    loop_conf: dict[str, str] | None = None,
 ) -> LoopResult:
     """Run supersteps until ``done(stat)`` or ``max_iters``.
 
     * ``init()`` builds iteration-0 state (ignored on resume).
     * ``step(state, it)`` emits the next-state DataFrame; it may carry extra
-      columns (e.g. ``old_rank``) that the statistic needs — ``restore``
+      columns (e.g. ``old_val``) that the statistic needs — ``restore``
       projects those away to produce the persistent state for the next round.
     * ``stat_expr`` (preferred): an aggregate Column (e.g.
       ``max(abs(new - old))``) piggybacked on the checkpoint job via
@@ -60,105 +58,12 @@ def bsp_loop(
       jobs per superstep (the CollectMetrics node rides the materialization
       the checkpoint already runs). NULL metric (empty frame) reads as 0.0.
     * ``stat`` (fallback): a callable issuing its own action AFTER the
-      lineage cut — one extra job per superstep; kept for statistics not
-      expressible as a single aggregate.
-    * ``loop_conf``: session SQL confs pinned for the duration of the loop
-      and restored after (even on error). This is a CLUSTER-SPECIFIC
-      pinning hook (e.g. a deployment that wants a fixed shuffle
-      parallelism inside the loop) — it is NOT an AQE-off recommendation.
-      The "disable AQE inside loops" hypothesis was tested and REFUTED
-      (BENCH.md round 4): AQE-on won all 8 paired comparisons at
-      V=200k/E=128M by 1.1-3.6×, because AQE's right-sizing of the
-      partial-fold exchange saves more task-launch cost than its
-      per-stage replan jobs add (the W≈0 probe in scripts/f_probe.py
-      itemizes the trade). Leave loops on the session's AQE setting
-      unless a measurement on YOUR cluster says otherwise.
-    * ``fuse`` (EXPERIMENTAL): supersteps per lineage cut / convergence
-      check. Same expressions and fold shapes as ``fuse=1``; results agree
-      to float-summation reordering (~1e-12 relative — Spark does not pin
-      the merge order of a double sum across plan shapes, so bit-equality
-      is NOT guaranteed; tests assert tight allclose). What changes is
-      scheduling: one checkpoint job + one Observation sync per ``fuse``
-      supersteps instead of per superstep, attacking the measured
-      ~1.3-2 s/superstep fixed driver cost (BENCH.md round-3 f+W/cores
-      fit). Intermediate sub-step states are ``persist()``-ed so each is
-      computed exactly once (a step references its input ≥2×; without the
-      cache a fused chain would re-execute geometrically). Convergence is
-      only observed per chunk, so a tol run may execute up to ``fuse-1``
-      supersteps past the crossing (harmless for contracting iterations).
-      Durable checkpoints stay on their ``checkpoint_every`` grid — chunks
-      never fuse across a save boundary, so resume granularity is
-      unchanged. ``stats`` gets one entry per chunk (the observed final
-      delta); ``wall_ms`` stays per superstep (chunk wall / sub-steps).
-      Status: correct on all fixtures, but on a 128M-edge input the fused
-      chunk planned/executed pathologically slowly (suspected AQE ×
-      nested-broadcast × InMemoryRelation interaction) — profile before
-      enabling on large inputs; the default stays 1 everywhere.
+      lineage cut — one extra job per superstep. Kept for ANF
+      (algorithms/anf.py:248), whose estimate is a per-vertex ``groupBy``
+      followed by a sum, which one ``Observation`` aggregate cannot express.
     """
     if stat_expr is None and stat is None:
         raise ValueError("bsp_loop needs stat_expr or stat")
-    if fuse < 1:
-        raise ValueError("bsp_loop: fuse must be >= 1")
-    if fuse > 1 and checkpoint is not None and checkpoint_every <= 1:
-        # chunks never cross a durable-save boundary, so checkpoint_every=1
-        # pins every chunk to a single superstep — fuse silently no-ops.
-        import warnings
-
-        warnings.warn(
-            "bsp_loop: fuse>1 with checkpoint_every<=1 disables fusion entirely"
-            " (every superstep is a save boundary); set checkpoint_every > fuse"
-            " for fusion to engage",
-            stacklevel=2,
-        )
-    saved_conf: dict[str, str | None] = {}
-    for k, v in (loop_conf or {}).items():
-        try:
-            saved_conf[k] = spark.conf.get(k)
-        except Exception:  # unset key
-            saved_conf[k] = None
-        spark.conf.set(k, v)
-    try:
-        return _run_loop(
-            spark,
-            init=init,
-            step=step,
-            stat=stat,
-            stat_expr=stat_expr,
-            done=done,
-            restore=restore,
-            max_iters=max_iters,
-            checkpoint=checkpoint,
-            checkpoint_every=checkpoint_every,
-            resume=resume,
-            edges_per_iter=edges_per_iter,
-            metric_kind=metric_kind,
-            fuse=fuse,
-        )
-    finally:
-        for k, v in saved_conf.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def _run_loop(
-    spark: SparkSession,
-    *,
-    init,
-    step,
-    stat,
-    stat_expr,
-    done,
-    restore,
-    max_iters: int,
-    checkpoint: CheckpointManager | None,
-    checkpoint_every: int,
-    resume: bool,
-    edges_per_iter: int,
-    metric_kind: str,
-    fuse: int,
-) -> LoopResult:
     start = 0
     if resume and checkpoint is not None and checkpoint.latest_iter() is not None:
         start = checkpoint.latest_iter() + 1
@@ -170,33 +75,17 @@ def _run_loop(
     walls: list[float] = []
     converged = False
     rounds = 0
-    it = start
-    while it < max_iters:
-        # chunk of n_sub supersteps: bounded by fuse, max_iters, and the
-        # durable-save grid (a chunk ends ON a boundary, never crosses one)
-        n_sub = 1
-        while (
-            n_sub < fuse
-            and it + n_sub < max_iters
-            and not (checkpoint is not None and (it + n_sub - 1) % checkpoint_every == 0)
-        ):
-            n_sub += 1
-        last_it = it + n_sub - 1
+    for it in range(start, max_iters):
         t0 = time.perf_counter()
         nxt = step(state, it)
-        mids: list[DataFrame] = []
-        for j in range(1, n_sub):
-            mid = restore(nxt).persist()
-            mids.append(mid)
-            nxt = step(mid, it + j)
         obs = None
         if stat_expr is not None:
-            obs = Observation(f"hz_stat_{last_it}")
+            obs = Observation(f"hz_stat_{it}")
             nxt = nxt.observe(obs, stat_expr.alias("stat"))
         if checkpoint is not None and (
-            last_it % checkpoint_every == 0 or last_it == max_iters - 1
+            it % checkpoint_every == 0 or it == max_iters - 1
         ):
-            nxt = checkpoint.save_state(last_it, nxt)
+            nxt = checkpoint.save_state(it, nxt)
         else:
             nxt = nxt.localCheckpoint(eager=True)
         if obs is not None:
@@ -205,25 +94,19 @@ def _run_loop(
         else:
             s = stat(nxt)
         wall = (time.perf_counter() - t0) * 1000.0
-        for mid in mids:  # chunk is materialized; intermediates are dead
-            mid.unpersist()
         stats.append(s)
-        walls.extend([wall / n_sub] * n_sub)
+        walls.append(wall)
         if checkpoint is not None:
-            # one metrics row per chunk: edges scale with n_sub so
-            # throughput derived from (edges_processed / wall_ms) stays
-            # exact under fusion (wall covers the whole chunk)
             checkpoint.append_metrics(
                 spark,
-                last_it,
-                edges_per_iter * n_sub if edges_per_iter > 0 else edges_per_iter,
+                it,
+                edges_per_iter,
                 wall,
                 s if metric_kind == "delta" else None,
                 int(s) if metric_kind == "changed" else None,
             )
         state = restore(nxt)
-        rounds = last_it - start + 1
-        it += n_sub
+        rounds = it - start + 1
         if done(s):
             converged = True
             break

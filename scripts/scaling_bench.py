@@ -39,17 +39,6 @@ LEVELS = tuple(
 # this VM differ ±2× from noise (CLAUDE.md protocol), interleaving is the
 # only valid A/B here. Per level we report every rep plus best-of.
 REPEATS = int(os.environ.get("HZ_SCALE_REPEATS", "1"))
-# supersteps per lineage cut (bsp_loop fuse): amortizes the ~1.4s/superstep
-# fixed driver cost (2 broadcast jobs + checkpoint job + Observation sync)
-# measured by the f + W/cores fit in BENCH.md — the term that caps local
-# N→4N efficiency once supersteps shrink below a few seconds.
-FUSE = int(os.environ.get("HZ_SCALE_FUSE", "1"))
-# AQE inside the BSP loop ("on"/"off"). Default ON: the round-4 A/B
-# (BENCH.md) REFUTED the AQE-off hypothesis — AQE-on won all 8 paired
-# comparisons at V=200k/E=128M (it coalesces the partial-fold exchange to
-# the right reduce width); "off" kept only for cluster-specific pinning.
-AQE = os.environ.get("HZ_SCALE_AQE", "on")
-LOOP_CONF = {"spark.sql.adaptive.enabled": "false"} if AQE == "off" else None
 
 
 def build_input() -> None:
@@ -109,12 +98,12 @@ def run_level(cpus: int) -> dict:
         s = sorted(xs)
         return s[len(s) // 2]
 
-    out: dict = {"cpus": cpus, "fuse": FUSE, "aqe": AQE, **meta}
+    out: dict = {"cpus": cpus, **meta}
     # DataFrame path: run WARMUP then MEASURE supersteps; report both the
     # total and the median per-superstep (robust to VM noise spikes).
-    res = pagerank(g, tol=None, max_iters=2, loop_conf=LOOP_CONF)  # warmup JVM/codegen
+    res = pagerank(g, tol=None, max_iters=2)  # warmup JVM/codegen
     t0 = time.perf_counter()
-    res = pagerank(g, tol=None, max_iters=MEASURE_DF, fuse=FUSE, loop_conf=LOOP_CONF)
+    res = pagerank(g, tol=None, max_iters=MEASURE_DF)
     df_wall = time.perf_counter() - t0
     med = median(res.wall_ms_per_iter) / 1000.0
     out["df_wall_s"] = round(df_wall, 3)
@@ -123,9 +112,9 @@ def run_level(cpus: int) -> dict:
 
     # CSR path: pre-built sidecar shared by both levels — identical
     # physical layout (32 blocks), only the core count varies.
-    pagerank_csr(g, csr, tol=None, max_iters=WARMUP, loop_conf=LOOP_CONF)
+    pagerank_csr(g, csr, tol=None, max_iters=WARMUP)
     t0 = time.perf_counter()
-    resc = pagerank_csr(g, csr, tol=None, max_iters=MEASURE, fuse=FUSE, loop_conf=LOOP_CONF)
+    resc = pagerank_csr(g, csr, tol=None, max_iters=MEASURE)
     csr_wall = time.perf_counter() - t0
     medc = median(resc.wall_ms_per_iter) / 1000.0
     out["csr_wall_s"] = round(csr_wall, 3)

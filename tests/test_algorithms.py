@@ -140,51 +140,6 @@ def test_triangles_invariant_under_permutation_and_dups(spark):
     assert triangle_total(g) == 2
 
 
-def test_pagerank_fused_supersteps_equivalent(spark):
-    """fuse>1 only changes scheduling (k sub-steps per lineage cut), not
-    the operator: fixed-iteration ranks must match fuse=1 on both physical
-    paths, including a chunk-remainder iteration count. Agreement is to
-    float-sum reordering (Spark does not pin the merge order of a double
-    sum across plan shapes), so the gate is a tight relative tolerance,
-    not bit equality."""
-    from hoshizora_spark.algorithms.pagerank import pagerank_csr
-
-    def close(a: dict, b: dict) -> bool:
-        return set(a) == set(b) and all(
-            abs(a[v] - b[v]) <= 1e-12 * max(abs(a[v]), 1e-30) for v in a
-        )
-
-    g = _graph(spark, "g6_powerlaw")
-    base = {r["vid"]: r["rank"] for r in pagerank(g, tol=None, max_iters=7).ranks.collect()}
-    for fuse in (3, 4):  # 7 = 3+3+1 and 4+3: both remainder shapes
-        fused = {
-            r["vid"]: r["rank"]
-            for r in pagerank(g, tol=None, max_iters=7, fuse=fuse).ranks.collect()
-        }
-        assert close(fused, base), f"fuse={fuse} diverged"
-    basec = {
-        r["vid"]: r["rank"] for r in pagerank_csr(g, tol=None, max_iters=7).ranks.collect()
-    }
-    fusedc = {
-        r["vid"]: r["rank"]
-        for r in pagerank_csr(g, tol=None, max_iters=7, fuse=3).ranks.collect()
-    }
-    assert close(fusedc, basec)
-
-
-def test_pagerank_fused_convergence_overshoot_bounded(spark):
-    """In tol mode a fused run may pass the crossing by ≤ fuse-1 supersteps
-    and must still land within tol of the unfused answer."""
-    g = _graph(spark, "g6_powerlaw")
-    a = pagerank(g, tol=1e-8, max_iters=300)
-    b = pagerank(g, tol=1e-8, max_iters=300, fuse=4)
-    assert b.converged
-    assert b.iterations <= a.iterations + 3
-    ra = {r["vid"]: r["rank"] for r in a.ranks.collect()}
-    rb = {r["vid"]: r["rank"] for r in b.ranks.collect()}
-    assert all(abs(ra[v] - rb[v]) < 1e-7 for v in ra)
-
-
 @pytest.mark.parametrize("name", FIXTURE_NAMES)
 def test_clustering_coefficients_exact(spark, name):
     from hoshizora_spark import clustering_coefficients
@@ -204,3 +159,19 @@ def test_clustering_coefficients_exact(spark, name):
         assert r["triangles"] == tri[v] and r["degree"] == deg[v], (name, v)
         want = 2.0 * tri[v] / (deg[v] * (deg[v] - 1.0)) if deg[v] >= 2 else 0.0
         assert r["lcc"] == want, (name, v, r["lcc"], want)
+
+
+def _cache_manager_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_triangles_leave_no_cached_frames(spark):
+    from hoshizora_spark.algorithms.triangles import triangle_counts, triangle_total
+
+    spark.catalog.clearCache()
+    g = Graph.from_edges(
+        edges_from_pairs(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (1, 3)])
+    )
+    assert triangle_total(g) == 4
+    _ = triangle_counts(g).collect()
+    assert _cache_manager_empty(spark)

@@ -1,4 +1,4 @@
-"""BFS hop distances vs oracle + DF/CSR equivalence."""
+"""BFS hop distances vs oracle (DF/CSR equivalence: test_engines.py)."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 
 from hoshizora_spark import Graph, edges_from_pairs
-from hoshizora_spark.algorithms.bfs import bfs_distances, bfs_distances_csr
+from hoshizora_spark.algorithms.bfs import bfs_distances
 from tests import oracle
 from tests.fixtures import ALL_FIXTURES
 
@@ -33,13 +33,3 @@ def test_bfs_multi_source_and_validation(spark):
     with pytest.raises(ValueError, match="outside vertex domain"):
         bfs_distances(g, sources=[99])
 
-
-@pytest.mark.parametrize("name", ["g1_chain", "g4_two_triangles_bridge", "g6_powerlaw"])
-def test_bfs_csr_bitmatches_df(spark, name):
-    edges = ALL_FIXTURES[name]
-    g = Graph.from_edges(edges_from_pairs(spark, edges))
-    df_rows = {r["vid"]: r["dist"] for r in
-               bfs_distances(g, [0], directed=False).distances.collect()}
-    csr_rows = {r["vid"]: r["dist"] for r in
-                bfs_distances_csr(g, [0], directed=False).distances.collect()}
-    assert df_rows == csr_rows

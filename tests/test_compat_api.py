@@ -72,3 +72,59 @@ def test_cli_pagerank(spark, edge_file, capsys):
 def test_cli_usage_error():
     assert cli_main([]) == 2
     assert cli_main(["nope"]) == 2
+
+
+def test_read_edge_list_drops_malformed_tokens(spark, tmp_path):
+    p = tmp_path / "edges.txt"
+    p.write_text("0 1\n# comment\n1 2\nbogus line\n2 notanint\n3 4\n")
+    got = sorted(
+        (r["src"], r["dst"]) for r in read_edge_list(spark, str(p)).collect()
+    )
+    assert got == [(0, 1), (1, 2), (3, 4)]
+
+
+def test_from_adjacency_mirrors_reference_builder(spark):
+    """Fixture mirrors the reference semantics: V = list length (isolated
+    trailing vertex counts), duplicate neighbors kept on the out side,
+    deduped on the gather side, round-trips through to_adjacency."""
+    adj = spark.createDataFrame(
+        [(0, [1, 2, 1]), (1, [2]), (2, []), (3, [0])],
+        schema="vid long, neighbors array<long>",
+    )
+    g = Graph.from_adjacency(adj)
+    assert g.num_vertices == 4
+    edges = sorted((r["src"], r["dst"]) for r in g.edges.collect())
+    assert edges == [(0, 1), (0, 1), (0, 2), (1, 2), (3, 0)]  # dup kept
+
+    g_in = Graph.from_adjacency(adj, dedup=True)
+    edges_in = sorted((r["src"], r["dst"]) for r in g_in.edges.collect())
+    assert edges_in == [(0, 1), (0, 2), (1, 2), (3, 0)]  # std::set view
+    # in-degrees of the gather-side view: vertex 1 sees src 0 once
+    indeg = {r["dst"]: r["in_deg"] for r in g_in.in_degrees.collect()}
+    assert indeg[1] == 1
+
+    back = {r["vid"]: r["neighbors"] for r in g.to_adjacency().collect()}
+    assert back == {0: [1, 1, 2], 1: [2], 2: [], 3: [0]}
+
+
+def test_from_adjacency_pagerank_equals_from_edges(spark):
+    """The two builders must define the same graph for the algorithms."""
+    from hoshizora_spark import pagerank
+
+    pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0)]
+    g_e = Graph.from_edges(edges_from_pairs(spark, pairs))
+    adj_rows = [(v, sorted(d for s, d in pairs if s == v)) for v in range(4)]
+    g_a = Graph.from_adjacency(
+        spark.createDataFrame(adj_rows, schema="vid long, neighbors array<long>")
+    )
+    r_e = {r["vid"]: r["rank"] for r in pagerank(g_e, tol=1e-9).ranks.collect()}
+    r_a = {r["vid"]: r["rank"] for r in pagerank(g_a, tol=1e-9).ranks.collect()}
+    assert all(abs(r_e[v] - r_a[v]) < 1e-12 for v in range(4))
+
+
+def test_from_edges_validate_domain(spark):
+    edges = spark.createDataFrame([(0, 1), (1, 5)], schema="src long, dst long")
+    with pytest.raises(ValueError, match="dense domain"):
+        Graph.from_edges(edges, num_vertices=4, validate=True)
+    g = Graph.from_edges(edges, num_vertices=6, validate=True)
+    assert g.num_vertices == 6

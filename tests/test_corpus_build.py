@@ -84,3 +84,21 @@ def test_pagerank_on_corpus_graph(corpus):
     assert res.converged
     total = res.ranks.agg(F.sum("rank")).first()[0]
     assert 0 < total <= bundle.num_vertices
+
+
+def test_dense_ids_exact_domain_with_four_partitions(spark):
+    """``repartitionByRange`` samples its bounds per execution; the offsets
+    pass and the numbering pass must see the same ranges, or ids repeat and
+    overrun the domain. Both the packer and the corpus graph builder must
+    hand out exactly 0..V-1."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    keys = spark.range(20_000).select(
+        F.format_string("r%03d", F.col("id") % 100).alias("repo"),
+        F.format_string("src/f%05d.py", F.col("id")).alias("path"),
+    )
+    vids = sorted(r["vid"] for r in assign_dense_ids(keys, ["repo", "path"]).collect())
+    assert vids == list(range(20_000))
+    corpus = synthesize_corpus(spark, num_repos=50, files_per_repo=100, seed=3)
+    bundle = build_graph_from_corpus(corpus)
+    vids = sorted(r["vid"] for r in bundle.vertices.select("vid").collect())
+    assert vids == list(range(5_000)) and bundle.num_vertices == 5_000

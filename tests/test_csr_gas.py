@@ -10,9 +10,11 @@ from hoshizora_spark import (
     build_csr_blocks,
     connected_components_csr,
     edges_from_pairs,
+    pagerank,
     pagerank_csr,
 )
-from hoshizora_spark.graph.csr import local_block_id
+from hoshizora_spark.graph import csr as csrmod
+from hoshizora_spark.graph.csr import load_block, local_block_id
 from tests import oracle
 from tests.fixtures import ALL_FIXTURES
 
@@ -75,7 +77,6 @@ def test_csr_block_invariants(spark):
     for r in rows:
         in_block = (vids >= r["lo"]) & (vids < r["hi"])
         assert (bids[in_block] == r["block_id"]).all()
-    csr.unpersist()
 
 
 @pytest.mark.parametrize(
@@ -189,3 +190,61 @@ def test_kcore_csr_bitmatches_df_path(spark, name):
     assert df_rows == csr_rows, f"{name}: CSR coreness diverges from DF"
     assert df_res.rounds == csr_res.rounds
     assert df_res.max_core == csr_res.max_core
+
+
+def _ring_graph(spark, n=40, extra=None):
+    pairs = [(i, (i + 1) % n) for i in range(n)] + (extra or [])
+    return Graph.from_edges(
+        spark.createDataFrame(pairs, schema="src long, dst long")
+    )
+
+
+def test_fs_for_scheme_detection():
+    from pyarrow import fs as pafs
+
+    f1, p1 = csrmod._fs_for("/tmp/somewhere")
+    assert isinstance(f1, pafs.LocalFileSystem)
+    assert p1 == "/tmp/somewhere"
+    f2, p2 = csrmod._fs_for("file:///tmp/elsewhere")
+    assert isinstance(f2, pafs.LocalFileSystem)
+    assert p2 == "/tmp/elsewhere"
+
+
+def test_csr_sidecar_through_file_uri(spark, tmp_path):
+    """Full build + superstep path through a file:// URI sidecar — the
+    pyarrow.fs code path a cluster deployment uses (with hdfs://, s3://
+    resolving through the same FileSystem.from_uri branch)."""
+    from hoshizora_spark.algorithms.pagerank import pagerank_csr
+
+    g = _ring_graph(spark, extra=[(0, 5), (0, 7), (3, 9)])
+    uri_root = f"file://{tmp_path}/sidecar"
+    csr = build_csr_blocks(g, num_blocks=3, sidecar_root=uri_root)
+    assert csr.path.startswith("file://")
+    # loader goes through the same scheme-detected filesystem
+    lo, hi, offsets, indices, *_ = load_block(csr.path, 0)
+    assert offsets[-1] == len(indices)
+    # end-to-end: CSR pagerank over the URI sidecar matches the DF path
+    want = {
+        r["vid"]: r["rank"]
+        for r in pagerank(g, tol=None, max_iters=8).ranks.collect()
+    }
+    got = {
+        r["vid"]: r["rank"]
+        for r in pagerank_csr(g, csr, tol=None, max_iters=8).ranks.collect()
+    }
+    assert got.keys() == want.keys()
+    assert np.allclose(
+        [got[k] for k in sorted(got)], [want[k] for k in sorted(want)], atol=1e-12
+    )
+
+
+def test_csr_bare_path_equals_uri_blocks(spark, tmp_path):
+    """Same graph built through a bare path and a file:// URI produces
+    byte-identical block arrays (scheme only changes transport)."""
+    g = _ring_graph(spark)
+    a = build_csr_blocks(g, num_blocks=2, sidecar_root=str(tmp_path / "bare"))
+    b = build_csr_blocks(g, num_blocks=2, sidecar_root=f"file://{tmp_path}/uri")
+    for bid in range(a.num_blocks):
+        ba, bb = load_block(a.path, bid), load_block(b.path, bid)
+        for xa, xb in zip(ba, bb):
+            np.testing.assert_array_equal(np.asarray(xa), np.asarray(xb))

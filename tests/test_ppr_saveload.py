@@ -1,4 +1,4 @@
-"""Personalized PageRank vs oracle + Graph save/load round-trip."""
+"""Personalized PageRank vs oracle + seed validation + Graph save/load round-trip."""
 
 from __future__ import annotations
 
@@ -49,8 +49,7 @@ def test_graph_save_load_roundtrip(spark, tmp_path):
 ])
 def test_personalized_pagerank_csr_matches_oracle_and_df(spark, name, sources):
     """The CSR teleport kernel must hit the same fixed point as the numpy
-    oracle AND track the DF path superstep-for-superstep (same message
-    multiset, same apply expression — only float-sum order may differ)."""
+    oracle (DF/CSR equivalence: test_engines.py)."""
     from hoshizora_spark import personalized_pagerank_csr
 
     edges = ALL_FIXTURES[name]
@@ -61,12 +60,6 @@ def test_personalized_pagerank_csr_matches_oracle_and_df(spark, name, sources):
     got = np.array([rows[i] for i in range(g.num_vertices)])
     want = oracle.personalized_pagerank(edges, sources, tol=1e-9)
     assert np.allclose(got, want, atol=1e-6)
-    df_res = personalized_pagerank(g, sources, tol=None, max_iters=10)
-    csr_res = personalized_pagerank_csr(g, sources, tol=None, max_iters=10)
-    df_rows = {r["vid"]: r["rank"] for r in df_res.ranks.collect()}
-    csr_rows = {r["vid"]: r["rank"] for r in csr_res.ranks.collect()}
-    for vid, r in df_rows.items():
-        assert abs(r - csr_rows[vid]) < 1e-12
 
 
 def test_personalized_pagerank_csr_rejects_huge_seed_sets(spark):
@@ -79,3 +72,9 @@ def test_personalized_pagerank_csr_rejects_huge_seed_sets(spark):
     g = Graph.from_edges(edges_from_pairs(spark, [(0, 1), (1, 0)]), num_vertices=n)
     with pytest.raises(ValueError, match="plan literals"):
         personalized_pagerank_csr(g, list(range(n - 1)))
+
+
+def test_personalized_pagerank_rejects_out_of_domain_seeds(spark):
+    g = Graph.from_edges(edges_from_pairs(spark, [(0, 1), (1, 2), (2, 0)]))
+    with pytest.raises(ValueError, match="outside vertex domain"):
+        personalized_pagerank(g, sources=[1, 99])

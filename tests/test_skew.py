@@ -3,9 +3,15 @@
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from hoshizora_spark import Graph, edges_from_pairs, pagerank
-from hoshizora_spark.runtime.skew import hot_keys, salted_join_edges_state, salted_sum
+from hoshizora_spark.runtime.skew import (
+    SALT_COL,
+    hot_keys,
+    salted_join_edges_state,
+    salted_sum,
+)
 from tests import oracle
 
 
@@ -63,3 +69,73 @@ def test_salted_sum_equals_plain_sum(spark):
         edges, "dst", F.lit(1.0), "s", num_salts=4
     ).collect()}
     assert plain == salted
+
+
+def test_salted_sum_spreads_on_single_partition_upstream(spark):
+    from hoshizora_spark.runtime.skew import salted_sum
+
+    # one hot key, identical payloads, forced into ONE upstream partition:
+    # the old partition-id salt would collapse to a single salt value
+    df = spark.createDataFrame(
+        [(7, 1.0)] * 400, schema="k long, v double"
+    ).coalesce(1)
+    out = salted_sum(df, "k", F.col("v"), "s", num_salts=8).collect()
+    assert out == [(7, 400.0)] or (out[0]["k"] == 7 and out[0]["s"] == 400.0)
+    # inspect stage-1 spread directly
+    salted = df.withColumn(
+        SALT_COL,
+        F.pmod(F.xxhash64(F.col("v"), F.monotonically_increasing_id()), F.lit(8)),
+    )
+    n_salts = salted.select(SALT_COL).distinct().count()
+    assert n_salts >= 4  # uniform-ish over 8 salts, never 1
+
+
+def test_streaming_snapshot_salted_pagerank_e2e(spark, tmp_path):
+    """The full lambda loop (VERDICT r4 stretch item): tail an edge
+    directory → windowed degree table → hot_keys_from_degrees → pagerank
+    on the snapshot WITH those salting decisions — and the salted fixed
+    point equals the plain one."""
+    from hoshizora_spark.runtime.skew import hot_keys_from_degrees
+    from hoshizora_spark.streaming.ingest import streaming_degrees_windowed
+
+    # vertex 7 bursts in the 00:00 window; a later 02:00 event advances
+    # the watermark so that window finalizes into the append-mode sink
+    rows = (
+        [("2024-01-01 00:01:00", 7, i) for i in range(6)]
+        + [("2024-01-01 00:02:00", 3, 7), ("2024-01-01 00:03:00", 5, 7)]
+        + [("2024-01-01 02:00:00", 1, 0)]
+    )
+    edge_dir = tmp_path / "edges"
+    batch = spark.createDataFrame(rows, schema="ts string, src long, dst long")
+    batch.coalesce(1).write.parquet(str(edge_dir))
+
+    stream = spark.readStream.schema(batch.schema).parquet(str(edge_dir))
+    deg = streaming_degrees_windowed(stream, window="10 minutes", watermark="30 minutes")
+    q = (
+        deg.writeStream.format("memory")
+        .queryName("e2e_deg_sink")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        sink = spark.sql("SELECT * FROM e2e_deg_sink")
+        hot = hot_keys_from_degrees(sink, min_count=3, key_col="vid", out_key="src")
+        assert {r["src"] for r in hot.collect()} == {7}
+    finally:
+        q.stop()
+
+    # snapshot run: same directory read as a batch table, salting driven
+    # by the live histogram (broadcast_vertices=0 forces the shuffle-join
+    # regime where salting engages)
+    g = Graph.from_edges(spark.read.parquet(str(edge_dir)).select("src", "dst"))
+    salted = pagerank(
+        g, tol=None, max_iters=10, broadcast_vertices=0, hot_keys_df=hot, num_salts=4
+    )
+    plain = pagerank(g, tol=None, max_iters=10)
+    got = {r["vid"]: r["rank"] for r in salted.ranks.collect()}
+    want = {r["vid"]: r["rank"] for r in plain.ranks.collect()}
+    assert got.keys() == want.keys()
+    assert np.allclose(
+        [got[k] for k in sorted(got)], [want[k] for k in sorted(want)], atol=1e-9
+    )

@@ -1,4 +1,5 @@
-"""Weighted SSSP vs Dijkstra oracle + DF/CSR equivalence + BFS degeneracy."""
+"""Weighted SSSP vs Dijkstra oracle + BFS degeneracy (DF/CSR equivalence:
+test_engines.py)."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import pytest
 
 from hoshizora_spark import Graph
 from hoshizora_spark.algorithms.bfs import bfs_distances
-from hoshizora_spark.algorithms.sssp import sssp_distances, sssp_distances_csr
+from hoshizora_spark.algorithms.sssp import sssp_distances
 from tests import oracle
 from tests.fixtures import ALL_FIXTURES
 
@@ -52,17 +53,6 @@ def test_sssp_multi_source_and_validation(spark):
     assert rows[3] == w(0, 1) + w(1, 2) + w(2, 3)
     with pytest.raises(ValueError, match="outside vertex domain"):
         sssp_distances(g, sources=[99])
-
-
-@pytest.mark.parametrize("name", ["g1_chain", "g4_two_triangles_bridge", "g6_powerlaw"])
-def test_sssp_csr_bitmatches_df(spark, name):
-    edges = ALL_FIXTURES[name]
-    g = _weighted_graph(spark, edges)
-    df_rows = {r["vid"]: r["dist"] for r in
-               sssp_distances(g, [0], directed=False).distances.collect()}
-    csr_rows = {r["vid"]: r["dist"] for r in
-                sssp_distances_csr(g, [0], directed=False).distances.collect()}
-    assert df_rows == csr_rows
 
 
 def test_sssp_unit_weights_degrade_to_bfs(spark):

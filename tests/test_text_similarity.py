@@ -376,3 +376,86 @@ def test_ivf_topk_over_cap_points_to_distributed(spark, clustered_emb):
             sim.ivf_topk(clustered_emb, q, k=3, n_centroids=3, nprobe=3, iters=2)
     finally:
         sim.MAX_QUERIES = old
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, schema="doc_id long, text string")
+
+
+def test_word_ngrams_short_docs_yield_no_grams(spark):
+    docs = _docs(
+        spark,
+        [(1, "only two"), (2, "one"), (3, ""), (4, "a full three gram doc here")],
+    )
+    got = {(r["doc_id"], r["gram"]) for r in text.word_ngrams(docs, n=3).collect()}
+    assert all(d == 4 for d, _ in got)
+    assert ("a full three" in {g for _, g in got})
+    assert len(got) == 4  # 6 tokens -> 4 trigrams
+
+
+def test_jaccard_pairs_survive_short_docs(spark):
+    docs = _docs(
+        spark,
+        [
+            (1, "alpha beta gamma delta epsilon zeta"),
+            (2, "alpha beta gamma delta epsilon zeta eta"),
+            (3, "x"),  # < n tokens: must not crash the join
+            (4, "y z"),
+        ],
+    )
+    pairs = text.jaccard_pairs(docs, n=3, threshold=0.5).collect()
+    assert {(r["a"], r["b"]) for r in pairs} == {(1, 2)}
+
+
+def test_minhash_pipeline_survives_short_docs(spark):
+    docs = _docs(
+        spark,
+        [
+            (1, "alpha beta gamma delta epsilon zeta"),
+            (2, "alpha beta gamma delta epsilon zeta eta"),
+            (3, "too short"),
+        ],
+    )
+    res = text.minhash_near_dups(docs, threshold=0.5).collect()
+    assert {(r["a"], r["b"]) for r in res} == {(1, 2)}
+
+
+def _cache_manager_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_ivf_index_leaves_no_cached_frames_and_assignments_survive(spark):
+    from hoshizora_spark.similarity import ivf_index
+
+    spark.catalog.clearCache()
+    emb = spark.createDataFrame(
+        [(i, [float(i % 4), float((i * 7) % 5), 1.0]) for i in range(40)],
+        schema="vec_id long, embedding array<float>",
+    )
+    assign, cents = ivf_index(emb, n_centroids=4, iters=2)
+    # consumed AFTER ivf_index returned (the unit-vector cache is gone by
+    # now) — the materialized assignment frame must still produce rows
+    assert assign.count() == 40
+    assert len(cents) == 4
+    assert _cache_manager_empty(spark)
+
+
+def test_ivf_topk_query_cap(spark, monkeypatch):
+    from hoshizora_spark import similarity
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(30)],
+        schema="vec_id long, emb array<double>",
+    ).withColumnRenamed("emb", "embedding")
+    queries = spark.createDataFrame(
+        [(i, [1.0, float(i), 0.5]) for i in range(5)],
+        schema="query_id long, embedding array<double>",
+    )
+    monkeypatch.setattr(similarity, "MAX_QUERIES", 3)
+    with pytest.raises(ValueError, match="MAX_QUERIES"):
+        similarity.ivf_topk(emb, queries, k=2, n_centroids=2, iters=1)
+    # under the cap: runs and returns per-query rows
+    out = similarity.ivf_topk(
+        emb, queries.limit(2), k=2, n_centroids=2, nprobe=2, iters=1
+    )
+    assert out.count() > 0
