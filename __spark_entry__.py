@@ -1270,7 +1270,7 @@ def q_kcore_small(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kcore_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same h-index coreness through the keyed CSR fold (per-block (dst, h)
     run-length counts over Arrow + the shared _hindex_agg) — bit-identical
-    to the DF path (test_kcore_csr_bitmatches_df_path), so the same
+    to the DF path (tests/test_engines.py), so the same
     chained-CTE oracle gates it."""
     from hoshizora_spark import Graph
     from hoshizora_spark.algorithms.kcore import k_core_hindex_csr
@@ -2136,7 +2136,7 @@ def oracle_sql() -> dict[str, str]:
         "smoothed_pagerank_fixed20": _smoothed_pagerank_fixed_sql(20),
         # CSR engine paths share the DF oracles — same fixed point, same
         # rounding; bit-level path equivalence is additionally asserted in
-        # tests/test_csr_gas.py
+        # tests/test_engines.py
         "pagerank_csr_fixed30": _pagerank_fixed_sql(PR_ITERS),
         "pagerank_weighted_fixed30": _pagerank_weighted_fixed_sql(PR_ITERS),
         "pagerank_weighted_csr_fixed30": _pagerank_weighted_fixed_sql(PR_ITERS),

@@ -75,12 +75,11 @@ def bfs_distances(
     sources: list[int],
     directed: bool = True,
     max_rounds: int = 200,
-    broadcast_vertices: int = 200_000,
 ) -> BfsResult:
     V = graph.num_vertices
     kernel = BfsKernel(dense_sources(sources, V, "bfs"))
     edges = graph.edges.select("src", "dst") if directed else symmetrize(graph.edges)
-    return _bfs(graph, kernel, DfEdges.cache(edges, V, broadcast_vertices), max_rounds)
+    return _bfs(graph, kernel, DfEdges.cache(edges, V), max_rounds)
 
 
 def bfs_distances_csr(

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hoshizora_spark.graph.core import (
+    BROADCAST_ROWS,
     Graph,
     cache_superstep_edges,
     maybe_broadcast,
@@ -47,7 +48,6 @@ def connected_components(
     max_rounds: int = 50,
     checkpoint: CheckpointManager | None = None,
     resume: bool = False,
-    broadcast_vertices: int = 200_000,
 ) -> ComponentsResult:
     spark = graph.spark
     V = graph.num_vertices
@@ -66,7 +66,7 @@ def connected_components(
         lbl_src = maybe_broadcast(
             labels.select(F.col("vid").cast(key_type).alias("src"), "label"),
             V,
-            broadcast_vertices,
+            BROADCAST_ROWS,
         )
         msgs = sym.join(lbl_src, "src").select(
             F.col("dst").cast("long").alias("vid"),  # back to the domain type
@@ -83,7 +83,7 @@ def connected_components(
         hop = maybe_broadcast(
             prop.select(F.col("vid").alias("jvid"), F.col("plabel").alias("jlabel")),
             V,
-            broadcast_vertices,
+            BROADCAST_ROWS,
         )
         return prop.join(hop, prop.plabel == hop.jvid, "left").select(
             "vid",

@@ -21,7 +21,9 @@ the engine:
        simultaneously, restricted to same-color edges (colors are frozen
        at the forward fixpoint, so the restriction is ONE precomputed
        edge filter, not a per-superstep comparison): marked vertices both
-       reach and are reached by their root -> SCC(root).
+       reach and are reached by their root -> SCC(root). COLOR and MARK
+       are one max kernel (``MaxReachKernel``) run by ``run_kernel`` on
+       different start states and edge views.
     4. EXTRACT — marked vertices get scc = color; at minimum the globally
        max active vid extracts each round, so the outer loop terminates.
 
@@ -29,6 +31,8 @@ Output contract: scc label = MAX vertex id in the component (the class
 root). All per-vertex state is V-row, all message folds are E-row hash
 aggs with broadcast/shuffle_hash-hinted state sides; nothing driver-side
 grows with the graph (the outer loop collects one scalar per round).
+If an inner fixpoint hits ``max_inner`` its colors or marks are partial,
+so the result reports ``converged=False``.
 """
 
 from __future__ import annotations
@@ -38,9 +42,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hoshizora_spark.graph.core import Graph, cache_superstep_edges, maybe_broadcast
+from hoshizora_spark.graph.core import (
+    BROADCAST_ROWS,
+    Graph,
+    cache_superstep_edges,
+    maybe_broadcast,
+)
 from hoshizora_spark.runtime.checkpoint import cut_lineage
-from hoshizora_spark.runtime.superstep import bsp_loop
+from hoshizora_spark.runtime.gas import DfEdges, VectorKernel, run_kernel
 
 
 @dataclass
@@ -51,25 +60,31 @@ class SccResult:
     extracted_per_round: list[int] = field(default_factory=list)
 
 
-def _changed_loop(spark, *, init, step, max_iters):
-    """Fixpoint driver shared by COLOR and MARK: stop when nothing changed."""
-    return bsp_loop(
-        spark,
-        init=init,
-        step=step,
-        stat_expr=F.sum((F.col("val") != F.col("old")).cast("long")),
-        done=lambda changed: changed == 0,
-        restore=lambda df: df.select("vid", "val"),
-        max_iters=max_iters,
-        metric_kind="changed",
-    )
+class MaxReachKernel(VectorKernel):
+    """Max-value propagation to the exact fixpoint from a given start
+    frame (the init hook): COLOR starts from (vid, vid) over the core,
+    MARK from (vid, color == vid) and runs on reversed same-color edges."""
+
+    combine = "max"
+    state_type = "long"
+
+    def __init__(self, start: DataFrame) -> None:
+        self.start = start
+
+    def init(self, vertices):
+        return self.start
+
+    def scatter_gather(self, src_vals, weights):
+        return src_vals
+
+    def apply_expr(self, vid, prev, acc):
+        return F.greatest(prev, acc)  # greatest skips a NULL acc
 
 
 def strongly_connected_components(
     graph: Graph,
     max_outer: int = 64,
     max_inner: int = 256,
-    broadcast_vertices: int = 200_000,
 ) -> SccResult:
     spark = graph.spark
     V = graph.num_vertices
@@ -79,6 +94,7 @@ def strongly_connected_components(
     )
     extracted_per_round: list[int] = []
     converged = False
+    inner_converged = True
     outer = 0
     for outer in range(1, max_outer + 1):
         active = labels.filter(F.col("scc").isNull()).select("vid")
@@ -86,7 +102,7 @@ def strongly_connected_components(
         if remaining == 0:
             converged = True
             break
-        act_b = maybe_broadcast(active, remaining, broadcast_vertices)
+        act_b = maybe_broadcast(active, remaining, BROADCAST_ROWS)
         edges = (
             base.join(act_b.withColumnRenamed("vid", "src"), "src", "left_semi")
             .join(act_b.withColumnRenamed("vid", "dst"), "dst", "left_semi")
@@ -111,7 +127,7 @@ def strongly_connected_components(
                 maybe_broadcast(
                     outdeg.select(F.col("src").cast("long").alias("vid")),
                     remaining,
-                    broadcast_vertices,
+                    BROADCAST_ROWS,
                 ),
                 "vid",
                 "left_semi",
@@ -120,7 +136,7 @@ def strongly_connected_components(
                 maybe_broadcast(
                     indeg.select(F.col("dst").cast("long").alias("vid")),
                     remaining,
-                    broadcast_vertices,
+                    BROADCAST_ROWS,
                 ),
                 "vid",
                 "left_semi",
@@ -137,49 +153,26 @@ def strongly_connected_components(
             edges.unpersist()
             converged = True
             break
-        core_b = maybe_broadcast(core, n_core, broadcast_vertices)
-        cedges = (
-            edges.join(
-                core_b.select(F.col("vid").cast(key_type).alias("src")), "src", "left_semi"
-            ).join(
-                core_b.select(F.col("vid").cast(key_type).alias("dst")), "dst", "left_semi"
-            )
-        ).persist()
+        core_b = maybe_broadcast(core, n_core, BROADCAST_ROWS)
+        cedges = edges.join(
+            core_b.select(F.col("vid").cast(key_type).alias("src")), "src", "left_semi"
+        ).join(core_b.select(F.col("vid").cast(key_type).alias("dst")), "dst", "left_semi")
 
         # 2. COLOR: forward max-id propagation to fixpoint
-        def color_step(state: DataFrame, it: int) -> DataFrame:
-            st = maybe_broadcast(
-                state.select(F.col("vid").cast(key_type).alias("src"), "val"),
-                n_core,
-                broadcast_vertices,
-            )
-            msgs = cedges.join(st, "src").select(
-                F.col("dst").cast("long").alias("vid"),
-                F.col("val").alias("m"),
-                F.lit(None).cast("long").alias("o"),
-            )
-            carrier = state.select(
-                "vid", F.col("val").alias("m"), F.col("val").alias("o")
-            )
-            return (
-                msgs.unionByName(carrier)
-                .groupBy("vid")
-                .agg(F.max("m").alias("val"), F.max("o").alias("old"))
-            )
-
-        cres = _changed_loop(
-            spark,
-            init=lambda: core.select("vid", F.col("vid").alias("val")),
-            step=color_step,
+        cres = run_kernel(
+            graph,
+            MaxReachKernel(core.select("vid", F.col("vid").alias("val"))),
+            DfEdges(cedges.persist(), key_type, n_core, E),
             max_iters=max_inner,
         )
         color = cres.state  # (vid, val=color)
 
         # 3. MARK: backward OR-propagation from class roots over SAME-COLOR
-        #    edges (colors frozen -> one precomputed filter)
-        col_b = maybe_broadcast(color, n_core, broadcast_vertices)
-        sedges = (
-            cedges.join(
+        #    edges (colors frozen -> one precomputed filter; the inner
+        #    color joins also restrict the edges to the core)
+        col_b = maybe_broadcast(color, n_core, BROADCAST_ROWS)
+        back = (
+            edges.join(
                 col_b.select(F.col("vid").cast(key_type).alias("src"), F.col("val").alias("cs")),
                 "src",
             )
@@ -188,37 +181,16 @@ def strongly_connected_components(
                 "dst",
             )
             .filter(F.col("cs") == F.col("cd"))
-            .select("src", "dst")
-        ).persist()
-
-        def mark_step(state: DataFrame, it: int) -> DataFrame:
-            st = maybe_broadcast(
-                state.select(F.col("vid").cast(key_type).alias("dst"), "val"),
-                n_core,
-                broadcast_vertices,
-            )
-            msgs = sedges.join(st, "dst").select(
-                F.col("src").cast("long").alias("vid"),
-                F.col("val").alias("m"),
-                F.lit(None).cast("long").alias("o"),
-            )
-            carrier = state.select(
-                "vid", F.col("val").alias("m"), F.col("val").alias("o")
-            )
-            return (
-                msgs.unionByName(carrier)
-                .groupBy("vid")
-                .agg(F.max("m").alias("val"), F.max("o").alias("old"))
-            )
-
-        mres = _changed_loop(
-            spark,
-            init=lambda: color.select(
-                "vid", (F.col("val") == F.col("vid")).cast("long").alias("val")
-            ),
-            step=mark_step,
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        roots = color.select("vid", (F.col("val") == F.col("vid")).cast("long").alias("val"))
+        mres = run_kernel(
+            graph,
+            MaxReachKernel(roots),
+            DfEdges(back.persist(), key_type, n_core, E),
             max_iters=max_inner,
         )
+        inner_converged = inner_converged and cres.converged and mres.converged
 
         # 4. EXTRACT: marked vertices join their root's SCC
         found = (
@@ -230,7 +202,7 @@ def strongly_connected_components(
             "vid", F.col("vid").alias("new_scc")
         )
         upd = maybe_broadcast(
-            found.unionByName(trimmed), remaining, broadcast_vertices
+            found.unionByName(trimmed), remaining, BROADCAST_ROWS
         )
         labels = cut_lineage(
             labels.join(upd, "vid", "left").select(
@@ -240,11 +212,9 @@ def strongly_connected_components(
         n_found = found.count()
         extracted_per_round.append(n_found + n_trim)
         edges.unpersist()
-        cedges.unpersist()
-        sedges.unpersist()
     return SccResult(
         labels=labels,
         outer_rounds=outer,
-        converged=converged,
+        converged=converged and inner_converged,
         extracted_per_round=extracted_per_round,
     )

@@ -85,11 +85,10 @@ def sssp_distances(
     weight_col: str = "weight",
     directed: bool = True,
     max_rounds: int = 200,
-    broadcast_vertices: int = 200_000,
 ) -> SsspResult:
     V = graph.num_vertices
     kernel = SsspKernel(dense_sources(sources, V, "sssp"))
-    ef = DfEdges.cache(_weighted_edge_view(graph, weight_col, directed), V, broadcast_vertices)
+    ef = DfEdges.cache(_weighted_edge_view(graph, weight_col, directed), V)
     return _sssp(graph, kernel, ef, max_rounds)
 
 

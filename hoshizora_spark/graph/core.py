@@ -90,6 +90,11 @@ def cache_superstep_edges(
     return cached, ("int" if compact else "long")
 
 
+# Largest state side a per-superstep join broadcasts: above it the driver
+# serializes each broadcast for longer than a shuffle_hash exchange takes.
+BROADCAST_ROWS = 200_000
+
+
 def maybe_broadcast(df: DataFrame, num_rows: int, threshold: int) -> DataFrame:
     """Broadcast-hint ``df`` when its row count is known to be small.
 

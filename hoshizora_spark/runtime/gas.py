@@ -35,23 +35,30 @@ reference's ``forward_indices`` static permutation (graph.h:354-388): the
 exchange delivers messages pre-grouped by dst, Spark's shuffle plays the
 role of the permutation.
 
-The same scalar kernel also compiles to a pure-DataFrame superstep
-(``df_step``: edges ⋈ state, message Column, one union-carrier groupBy),
-and ``run_kernel`` drives either engine through ``bsp_loop`` — an
-algorithm is "prepare the edge view + build the kernel + run".
+The same kernel also compiles to a pure-DataFrame superstep (``df_step``:
+edges ⋈ state, message Column, one union-carrier groupBy). A
+``KeyedKernel`` (per-(dst, key) count maps — label propagation, h-index)
+differs only in its message: the counted (dst, key) entries instead of a
+per-edge scalar. Both kinds share one carrier fold on both engines, and
+``run_kernel`` drives either engine through ``bsp_loop`` — an algorithm is
+"prepare the edge view + build the kernel + run".
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Protocol
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hoshizora_spark.graph.core import Graph, cache_superstep_edges, maybe_broadcast
+from hoshizora_spark.graph.core import (
+    BROADCAST_ROWS,
+    Graph,
+    cache_superstep_edges,
+    maybe_broadcast,
+)
 from hoshizora_spark.graph.csr import CsrBlocks
 from hoshizora_spark.runtime.checkpoint import CheckpointManager
 from hoshizora_spark.runtime.skew import salted_join_edges_state
@@ -84,8 +91,17 @@ class VectorKernel:
     combine: str  # 'sum' | 'min' | 'max' — the zero+sum monoid
     state_type = "double"  # Spark type of the vertex state column
 
+    def init(self, vertices: DataFrame) -> DataFrame:
+        """Iteration-0 (vid, val) frame over ``vertices`` (vid: long) —
+        kernel.h:12 ``init``. Defaults to ``init_expr`` per vertex; a kernel
+        whose start state is not a function of vid alone (k-core's h0 =
+        degree, SCC's core-only domain) overrides this hook."""
+        return vertices.select(
+            "vid", self.init_expr(F.col("vid")).cast(self.state_type).alias("val")
+        )
+
     def init_expr(self, vid: Column) -> Column:
-        """Iteration-0 state (kernel.h:12 ``init``)."""
+        """Iteration-0 state of one vertex."""
         raise NotImplementedError
 
     def scatter_gather(self, src_vals, weights):
@@ -103,6 +119,44 @@ class VectorKernel:
         (None = every edge sends). Pure pruning: a dropped message must not
         change the fold's result."""
         return None
+
+    def aggregate(self, msgs: Column) -> Column:
+        """Per-vertex fold of the messages (NULL when none arrived)."""
+        return _COMBINES[self.combine](msgs)
+
+    def __getstate__(self):
+        # the numpy hooks ship to Python workers with their kernel; frames
+        # the init hook reads stay on the driver
+        return {k: v for k, v in vars(self).items() if not isinstance(v, DataFrame)}
+
+
+class KeyedKernel(VectorKernel):
+    """GAS kernel whose per-dst accumulator is a (key → count) map — the
+    struct-valued fold the scalar sum/min/max monoid can't express.
+
+    This is the generalization the reference reaches with pair-typed state
+    + a side-band ``changed`` flag in its kernel ``sum``
+    (clustering_louvain.h:62-75). ``scatter_key`` maps gathered src states
+    to a per-edge integer key (numpy on CSR blocks, a Column on the DF
+    engine); both engines count edges per (dst, key), turn each count into
+    an ``entry`` and fold a vertex's entries with ``aggregate``; ``apply_expr``
+    reads the folded value. The run stops at the exact fixpoint.
+    """
+
+    combine = "count"  # per (dst, key); not a numeric sum → exact fixpoint
+    state_type = "long"
+
+    def scatter_key(self, src_vals):
+        """Per-edge key from gathered src state."""
+        raise NotImplementedError
+
+    def entry(self, key: Column, cnt: Column) -> Column:
+        """One per-(dst, key) entry from the key and its edge count."""
+        raise NotImplementedError
+
+    def aggregate(self, entries: Column) -> Column:
+        """Per-vertex fold of the entries (NULL / empty when none arrived)."""
+        raise NotImplementedError
 
 
 def _partial_fold(combine: str, msgs_sorted: np.ndarray, starts: np.ndarray) -> np.ndarray:
@@ -165,34 +219,10 @@ def gas_partial_messages(
 def gas_messages(csr: CsrBlocks, state: DataFrame, kernel: VectorKernel) -> DataFrame:
     """(dst, acc) after the full fold — steps 1-3 above."""
     partial = gas_partial_messages(csr, state, kernel)
-    agg = _COMBINES[kernel.combine]
-    return partial.groupBy("dst").agg(agg("acc").alias("acc"))
+    return partial.groupBy("dst").agg(kernel.aggregate(F.col("acc")).alias("acc"))
 
 
-class KeyedVectorKernel(Protocol):
-    """GAS kernel whose per-dst accumulator is a (key → count) map — the
-    struct-valued fold the scalar sum/min/max monoid can't express.
-
-    This is the CSR-path generalization the reference reaches with
-    pair-typed state + a side-band ``changed`` flag in its kernel ``sum``
-    (clustering_louvain.h:62-75); label propagation's per-(dst, label)
-    counting is the canonical instance. ``scatter_key`` maps gathered src
-    states to a per-edge integer key; the fold counts occurrences per
-    (dst, key); the argmax/tiebreak over the map happens algorithm-side on
-    the (dst, key, cnt) frame.
-    """
-
-    state_type: str  # Spark type of the vertex state column, e.g. 'long'
-
-    def init_expr(self, vid: Column) -> Column:
-        ...
-
-    def scatter_key(self, src_vals: np.ndarray) -> np.ndarray:
-        """Per-edge key from gathered src state (identity for LPA)."""
-        ...
-
-
-def gas_keyed_counts(csr: CsrBlocks, state: DataFrame, kernel: KeyedVectorKernel) -> DataFrame:
+def gas_keyed_counts(csr: CsrBlocks, state: DataFrame, kernel: KeyedKernel) -> DataFrame:
     """(dst, key, cnt) after the full fold — the keyed analogue of
     ``gas_messages``. Per block: gather src states in dst-sorted order,
     map to keys, run-length-encode consecutive (dst, key) runs after an
@@ -345,53 +375,72 @@ def gas_gain_argmax(
     )
 
 
-def gas_step(csr: CsrBlocks, state: DataFrame, kernel: VectorKernel) -> DataFrame:
-    """One full superstep: returns (vid, block_id, new_val, old_val).
+def _carrier_fold(msgs: DataFrame, state: DataFrame, kernel: VectorKernel) -> DataFrame:
+    """Fold + apply, fused — the shared tail of every superstep on both
+    engines: returns (vid, [block_id,] new_val, old_val).
 
-    The apply join is folded INTO the final cross-block fold: block
-    partials union a NULL-acc carrier row per vertex (carrying old state +
-    block ownership), and one groupBy(dst) computes the monoid fold
-    (min/max/sum all skip NULLs — acc stays NULL when no message arrived,
-    the old left-join-miss case) plus ``max(old)``/``max(bid)`` (exactly
-    one non-null per vid). A superstep is then ONE Spark job: state
-    exchange → per-block numpy fold → final agg → checkpoint — no
-    broadcast-collect job, no apply join (the BENCH.md ``f + W/cores``
-    fixed-cost attack; the old shape paid an extra driver job per
-    superstep to broadcast the folded acc back into the join).
+    ``msgs`` is (vid, m): per-edge messages, per-block partials or keyed
+    entries. They union a NULL-m carrier row per vertex (carrying old
+    state, plus block ownership when ``state`` has a ``block_id``), and
+    one groupBy(vid) computes ``kernel.aggregate`` (aggregates skip NULLs,
+    so acc stays NULL when no message arrived) plus ``max(old)``/
+    ``max(block_id)`` (exactly one non-null per vid). A superstep is then
+    ONE Spark job: no broadcast-collect job, no apply join (the BENCH.md
+    ``f + W/cores`` fixed-cost attack).
     """
-    partial = gas_partial_messages(csr, state, kernel).select(
-        "dst",
-        "acc",
+    bid = ["block_id"] if "block_id" in state.columns else []
+    msgs = msgs.select(
+        "vid",
+        "m",
         F.lit(None).cast(kernel.state_type).alias("old"),
-        F.lit(None).cast("int").alias("bid"),
+        *[F.lit(None).cast("int").alias(c) for c in bid],
     )
     carrier = state.select(
-        F.col("vid").alias("dst"),
-        F.lit(None).cast("double").alias("acc"),
+        "vid",
+        F.lit(None).cast(msgs.schema["m"].dataType).alias("m"),
         F.col("val").alias("old"),
-        F.col("block_id").alias("bid"),
+        *bid,
     )
-    agg = _COMBINES[kernel.combine]
-    folded = partial.unionByName(carrier).groupBy("dst").agg(
-        agg("acc").alias("acc"),
+    folded = msgs.unionByName(carrier).groupBy("vid").agg(
+        kernel.aggregate(F.col("m")).alias("acc"),
         F.max("old").alias("old_val"),
-        F.max("bid").alias("block_id"),
+        *[F.max(c).alias(c) for c in bid],
     )
     return folded.select(
-        F.col("dst").alias("vid"),
-        "block_id",
-        kernel.apply_expr(F.col("dst"), F.col("old_val"), F.col("acc")).alias("new_val"),
-        F.col("old_val"),
+        "vid",
+        *bid,
+        kernel.apply_expr(F.col("vid"), F.col("old_val"), F.col("acc")).alias("new_val"),
+        "old_val",
     )
+
+
+def _keyed_entries(counts: DataFrame, kernel: KeyedKernel) -> DataFrame:
+    """(dst, key, cnt) → (vid, m = entry): the keyed message on both engines."""
+    return counts.select(
+        F.col("dst").cast("long").alias("vid"),  # back to the domain type
+        kernel.entry(F.col("key"), F.col("cnt")).alias("m"),
+    )
+
+
+def gas_step(csr: CsrBlocks, state: DataFrame, kernel: VectorKernel) -> DataFrame:
+    """One CSR-engine superstep: returns (vid, block_id, new_val, old_val).
+
+    State exchange → per-block numpy fold (scalar partials, or keyed
+    (dst, key) counts summed across blocks) → ``_carrier_fold``.
+    """
+    if isinstance(kernel, KeyedKernel):
+        msgs = _keyed_entries(gas_keyed_counts(csr, state, kernel), kernel)
+    else:
+        msgs = gas_partial_messages(csr, state, kernel).select(
+            F.col("dst").alias("vid"), F.col("acc").alias("m")
+        )
+    return _carrier_fold(msgs, state, kernel)
 
 
 def init_state(spark, csr: CsrBlocks, kernel: VectorKernel) -> DataFrame:
     """(vid, val, block_id) — block ownership computed once, here only."""
-    return spark.range(csr.num_vertices).select(
-        F.col("id").alias("vid"),
-        kernel.init_expr(F.col("id")).cast(kernel.state_type).alias("val"),
-        csr.block_id_of(F.col("id")).alias("block_id"),
-    )
+    vertices = spark.range(csr.num_vertices).select(F.col("id").alias("vid"))
+    return kernel.init(vertices).withColumn("block_id", csr.block_id_of(F.col("vid")))
 
 
 @dataclass
@@ -408,7 +457,7 @@ class DfEdges:
     key_type: str  # 'int' | 'long' — cast the state's vid to this to join
     num_vertices: int
     num_edges: int
-    broadcast_vertices: int = 200_000
+    broadcast_vertices: int = BROADCAST_ROWS
     hot: DataFrame | None = None
     num_salts: int = 16
 
@@ -416,7 +465,7 @@ class DfEdges:
     def cache(
         edges: DataFrame,
         num_vertices: int,
-        broadcast_vertices: int = 200_000,
+        broadcast_vertices: int = BROADCAST_ROWS,
         hot: DataFrame | None = None,
         num_salts: int = 16,
     ) -> "DfEdges":
@@ -436,12 +485,9 @@ def df_step(ef: DfEdges, state: DataFrame, kernel: VectorKernel) -> DataFrame:
     """One DataFrame-engine superstep: returns (vid, new_val, old_val).
 
     The same kernel as ``gas_step``, compiled to Catalyst: one
-    edges ⋈ state→src join, ``scatter_gather`` on Columns as the message,
-    and the apply folded into the message aggregation — per-edge messages
-    union a NULL-message carrier row per vertex, and one groupBy(vid)
-    computes both the monoid fold (NULL when no in-message) and
-    ``max(old)`` (exactly one non-null per vid). No broadcast-collect job,
-    no apply join.
+    edges ⋈ state→src join, then either ``scatter_gather`` on Columns as the
+    per-edge message or, for a ``KeyedKernel``, a groupBy(dst, key) count
+    whose entries are the message; ``_carrier_fold`` does the rest.
     """
     st = state.select(F.col("vid").cast(ef.key_type).alias("src"), F.col("val").alias("sv"))
     if ef.hot is not None:
@@ -451,24 +497,16 @@ def df_step(ef: DfEdges, state: DataFrame, kernel: VectorKernel) -> DataFrame:
     send = kernel.sends(F.col("sv"))
     if send is not None:
         joined = joined.filter(send)
+    if isinstance(kernel, KeyedKernel):
+        key = kernel.scatter_key(F.col("sv")).alias("key")
+        counts = joined.groupBy("dst", key).agg(F.count(F.lit(1)).alias("cnt"))
+        return _carrier_fold(_keyed_entries(counts, kernel), state, kernel)
     w = F.col("w") if "w" in ef.edges.columns else F.lit(1.0)
     msgs = joined.select(
         F.col("dst").cast("long").alias("vid"),  # back to the domain type
         kernel.scatter_gather(F.col("sv"), w).alias("m"),
-        F.lit(None).cast(kernel.state_type).alias("old"),
     )
-    carrier = state.select(
-        "vid", F.lit(None).cast("double").alias("m"), F.col("val").alias("old")
-    )
-    agg = _COMBINES[kernel.combine]
-    folded = msgs.unionByName(carrier).groupBy("vid").agg(
-        agg("m").alias("acc"), F.max("old").alias("old_val")
-    )
-    return folded.select(
-        "vid",
-        kernel.apply_expr(F.col("vid"), F.col("old_val"), F.col("acc")).alias("new_val"),
-        "old_val",
-    )
+    return _carrier_fold(msgs, state, kernel)
 
 
 def dense_sources(sources: list[int], num_vertices: int, what: str) -> list[int]:
@@ -493,24 +531,21 @@ def run_kernel(
     checkpoint_every: int = 1,
     resume: bool = False,
 ) -> LoopResult:
-    """Run ``kernel`` to convergence on either engine; state comes back as
-    (vid, val). ``edges`` picks the engine: ``DfEdges`` → ``df_step``
-    (released after the loop), ``CsrBlocks`` → ``gas_step``.
+    """Run ``kernel`` to convergence on either engine; state starts from
+    ``kernel.init`` and comes back as (vid, val). ``edges`` picks the
+    engine: ``DfEdges`` → ``df_step`` (released after the loop),
+    ``CsrBlocks`` → ``gas_step``.
 
-    The convergence statistic follows the monoid: a sum fold converges
+    The convergence statistic follows the fold: a sum converges
     numerically (max|Δ| ≤ ``tol``; ``tol=None`` runs ``max_iters``), while
-    min/max folds are monotone and stop at the exact fixpoint (no vertex
-    changed; ``tol`` is unused).
+    min/max and keyed folds stop at the exact fixpoint (no vertex changed;
+    ``tol`` is unused).
     """
     spark = graph.spark
     csr = isinstance(edges, CsrBlocks)
 
     def init() -> DataFrame:
-        if csr:
-            return init_state(spark, edges, kernel)
-        return graph.vertices().select(
-            "vid", kernel.init_expr(F.col("vid")).cast(kernel.state_type).alias("val")
-        )
+        return init_state(spark, edges, kernel) if csr else kernel.init(graph.vertices())
 
     def step(state: DataFrame, it: int) -> DataFrame:
         return gas_step(edges, state, kernel) if csr else df_step(edges, state, kernel)

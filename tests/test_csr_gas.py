@@ -84,27 +84,6 @@ def test_csr_block_invariants(spark):
     ["g1_chain", "g2_cycle", "g3_star", "g4_two_triangles_bridge",
      "g5_multi_dup_isolated", "g6_powerlaw", "g7_bipartite"],
 )
-def test_lpa_csr_bitmatches_df_path(spark, name):
-    """Keyed CSR kernel (per-(dst,label) counts) must reproduce the DF
-    path's labels exactly, round-for-round, on every fixture — the same
-    equivalence discipline as the scalar pagerank/cc CSR tests."""
-    from hoshizora_spark import label_propagation
-    from hoshizora_spark.algorithms.labelprop import label_propagation_csr
-
-    g = _graph(spark, name)
-    df_res = label_propagation(g, max_rounds=10)
-    csr_res = label_propagation_csr(g, max_rounds=10)
-    df_rows = {r["vid"]: r["label"] for r in df_res.labels.collect()}
-    csr_rows = {r["vid"]: r["label"] for r in csr_res.labels.collect()}
-    assert df_rows == csr_rows, f"{name}: CSR labels diverge from DF labels"
-    assert df_res.rounds == csr_res.rounds
-
-
-@pytest.mark.parametrize(
-    "name",
-    ["g1_chain", "g2_cycle", "g3_star", "g4_two_triangles_bridge",
-     "g5_multi_dup_isolated", "g6_powerlaw", "g7_bipartite"],
-)
 def test_clustering_csr_bitmatches_df_path(spark, name):
     """The clustering best-move superstep through the CSR gain-argmax fold
     (gas_gain_argmax over raw-weight blocks) must produce bit-identical
@@ -168,28 +147,6 @@ def test_clustering_entry_query_equal_through_both_paths(spark, sf_dir, monkeypa
     monkeypatch.setenv("HZ_CLUSTERING_CSR", "1")
     csr_rows = {(r["vid"], r["cluster"]) for r in q(spark, sf_dir).collect()}
     assert df_rows == csr_rows
-
-
-@pytest.mark.parametrize(
-    "name",
-    ["g1_chain", "g2_cycle", "g3_star", "g4_two_triangles_bridge",
-     "g5_multi_dup_isolated", "g6_powerlaw", "g7_bipartite"],
-)
-def test_kcore_csr_bitmatches_df_path(spark, name):
-    """The h-index iteration through the keyed CSR fold must reproduce the
-    DF path's coreness exactly, round-for-round: same (dst, h) histogram
-    counts, same shared _hindex_agg fold, same convergence round."""
-    from hoshizora_spark import k_core_hindex
-    from hoshizora_spark.algorithms.kcore import k_core_hindex_csr
-
-    g = _graph(spark, name)
-    df_res = k_core_hindex(g)
-    csr_res = k_core_hindex_csr(g)
-    df_rows = {r["vid"]: r["coreness"] for r in df_res.coreness.collect()}
-    csr_rows = {r["vid"]: r["coreness"] for r in csr_res.coreness.collect()}
-    assert df_rows == csr_rows, f"{name}: CSR coreness diverges from DF"
-    assert df_res.rounds == csr_res.rounds
-    assert df_res.max_core == csr_res.max_core
 
 
 def _ring_graph(spark, n=40, extra=None):

@@ -89,3 +89,16 @@ def test_scc_chained_cycles_needs_multiple_outer_rounds(spark):
     want = oracle.strongly_connected_components(edges, g.num_vertices)
     assert (got == want).all()
     assert res.outer_rounds > 1
+
+
+def test_scc_truncated_inner_loop_is_not_converged(spark):
+    """A 12-vertex directed cycle with max_inner=3: COLOR stops before the
+    max id has gone round, so the extraction sees partial colors. The
+    result must say so (or be right anyway) — never false singletons
+    reported as converged."""
+    edges = [(i, (i + 1) % 12) for i in range(12)]
+    g = Graph.from_edges(edges_from_pairs(spark, edges))
+    res = strongly_connected_components(g, max_inner=3)
+    got = _labels(res, g.num_vertices)
+    want = oracle.strongly_connected_components(edges, g.num_vertices)
+    assert res.converged is False or (got == want).all()
