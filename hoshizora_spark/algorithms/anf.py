@@ -71,7 +71,6 @@ def neighborhood_function(
     directed: bool = False,
     max_rounds: int = 200,
     q: float = 0.9,
-    broadcast_rows: int = 200_000,
 ) -> AnfResult:
     """Exact N(h) by bitset union over the (un)directed graph.
 
@@ -104,7 +103,6 @@ def neighborhood_function(
         st_src = maybe_broadcast(
             state.select(F.col("vid").alias("src"), "pos", "word"),
             V * W,  # worst-case row bound (monotone growth toward it)
-            broadcast_rows,
         )
         msgs = edges.join(st_src, "src").select(
             F.col("dst").alias("vid"), "pos", "word"
@@ -177,7 +175,6 @@ def neighborhood_function_hll(
     directed: bool = False,
     max_rounds: int = 200,
     q: float = 0.9,
-    broadcast_rows: int = 200_000,
 ) -> AnfResult:
     """HyperANF: approximate N(h) with per-vertex HLL sketches.
 
@@ -205,11 +202,7 @@ def neighborhood_function_hll(
         )
 
     def step(state: DataFrame, it: int) -> DataFrame:
-        st_src = maybe_broadcast(
-            state.select(F.col("vid").alias("src"), "reg", "rho"),
-            V * m,
-            broadcast_rows,
-        )
+        st_src = maybe_broadcast(state.select(F.col("vid").alias("src"), "reg", "rho"), V * m)
         msgs = edges.join(st_src, "src").select(
             F.col("dst").alias("vid"), "reg", "rho"
         )

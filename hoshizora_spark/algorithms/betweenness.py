@@ -77,7 +77,6 @@ def betweenness_centrality(
     seed: int = 0,
     round_dp: int | None = None,
     max_rounds: int = 200,
-    broadcast_rows: int = 200_000,
 ) -> BetweennessResult:
     """Exact (``sample_mod=None``, all sources) or sampled Brandes
     betweenness over the (un)directed simple graph. Isolated vertices and
@@ -124,7 +123,6 @@ def betweenness_centrality(
                 F.col("vid").cast(key_type).alias("u"), "src", "sigma"
             ),
             pair_bound,
-            broadcast_rows,
         )
         # all shortest-path mass for a newly reached (vid, src) arrives in
         # THIS superstep (BFS layer property), so summing message sigma is
@@ -189,7 +187,7 @@ def betweenness_centrality(
         # so every loop entry is a counted interior level
         done_rows = d_next.select("src", "vid", "delta")
         acc = done_rows if acc is None else acc.unionByName(done_rows)
-        bd = maybe_broadcast(d_next, pair_bound, broadcast_rows)
+        bd = maybe_broadcast(d_next, pair_bound)
         contrib = (
             edges.join(bd, edges["dst"].cast("long") == bd["vid"])
             .select(

@@ -61,7 +61,6 @@ def harmonic_centrality(
     directed: bool = False,
     max_rounds: int = 200,
     round_dp: int | None = None,
-    broadcast_rows: int = 200_000,
 ) -> CentralityResult:
     """Exact H(v) over the (un)directed graph; isolated vertices get 0.0.
 
@@ -87,7 +86,6 @@ def harmonic_centrality(
         st = maybe_broadcast(
             state.select(F.col("vid").cast(key_type).alias("u"), "src", "dist"),
             V * V,  # worst-case pair bound
-            broadcast_rows,
         )
         msgs = edges.join(st, edges["src"] == st["u"]).select(
             F.col("dst").cast("long").alias("vid"),
@@ -185,7 +183,6 @@ def hits(
     tol: float | None = 1e-8,
     directed: bool = True,
     round_dp: int | None = None,
-    broadcast_rows: int = 200_000,
 ) -> HitsResult:
     """Kleinberg HITS hubs & authorities (sequential half-steps,
     L1-normalized): a_i = norm(Aᵀ h_{i-1}), h_i = norm(A a_i). Not shipped
@@ -233,11 +230,7 @@ def hits(
         return raw.crossJoin(F.broadcast(tot)).select(*keep, newv.alias(val_out))
 
     def step(state: DataFrame, it: int) -> DataFrame:
-        st = maybe_broadcast(
-            state.select(F.col("vid").cast(key_type).alias("u"), "a", "h"),
-            V,
-            broadcast_rows,
-        )
+        st = maybe_broadcast(state.select(F.col("vid").cast(key_type).alias("u"), "a", "h"), V)
         # authority half-step: fold h over IN-edges, carry old a/h for the delta
         amsgs = edges.join(st, edges["src"] == st["u"]).select(
             F.col("dst").cast("long").alias("vid"),
@@ -253,9 +246,7 @@ def hits(
         # hinted like the state side — without it Catalyst picks sort-merge
         # and re-sorts the persisted E-row side every superstep)
         an = maybe_broadcast(
-            a_new.select(F.col("vid").cast(key_type).alias("w"), F.col("a").alias("aval")),
-            V,
-            broadcast_rows,
+            a_new.select(F.col("vid").cast(key_type).alias("w"), F.col("a").alias("aval")), V
         )
         hmsgs = edges.join(an, edges["dst"] == an["w"]).select(
             F.col("src").cast("long").alias("vid"),
@@ -293,7 +284,6 @@ def harmonic_centrality_hll(
     m: int = 64,
     directed: bool = False,
     max_rounds: int = 200,
-    broadcast_rows: int = 200_000,
 ) -> CentralityResult:
     """HyperBall: approximate H(v) at any scale (V·m sketch rows).
 
@@ -345,9 +335,7 @@ def harmonic_centrality_hll(
     rounds, converged = 0, False
     for it in range(1, max_rounds + 1):
         st = maybe_broadcast(
-            sketch.select(F.col("vid").cast(key_type).alias("src"), "reg", "rho"),
-            V * m,
-            broadcast_rows,
+            sketch.select(F.col("vid").cast(key_type).alias("src"), "reg", "rho"), V * m
         )
         msgs = edges.join(st, "src").select(
             F.col("dst").cast("long").alias("vid"), "reg", "rho"
@@ -364,7 +352,7 @@ def harmonic_centrality_hll(
         prev_mass = mass
         est = ball_estimates(sketch)
         acc = cut_lineage(
-            maybe_broadcast(acc, V, broadcast_rows)
+            maybe_broadcast(acc, V)
             .join(est, "vid")
             .select(
                 "vid",

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from hoshizora_spark.graph.core import Graph, maybe_broadcast
 from hoshizora_spark.graph.ids import assign_dense_ids
 from hoshizora_spark.runtime.checkpoint import cut_lineage
+from hoshizora_spark.runtime.jump import pointer_jump
 
 
 @dataclass
@@ -70,12 +71,12 @@ def _strength_q(
     # levels (the ≥3-references trap in CLAUDE.md; measured: level 6's
     # superstep went from <1 s to minutes on g6_powerlaw).
     q = cut_lineage(q)
-    return maybe_broadcast(q, num_coarse, 200_000)
+    return maybe_broadcast(q, num_coarse)
 
 
 def _moves_from_best(best: DataFrame, vprops: DataFrame, num_coarse: int) -> DataFrame:
     """Common tail: (cid, adopt) ⋈ all vertices → (cid, new_label, moved)."""
-    best = maybe_broadcast(best, num_coarse, 200_000)
+    best = maybe_broadcast(best, num_coarse)
     return vprops.select("cid").join(best, "cid", "left").select(
         "cid",
         F.coalesce(F.col("adopt"), F.col("cid")).alias("new_label"),
@@ -150,39 +151,6 @@ def _best_moves_csr(
     return _moves_from_best(best, vprops, num_coarse)
 
 
-def _pointer_jump(labels: DataFrame, num_coarse: int, max_hops: int = 64) -> DataFrame:
-    """label[v] <- label[label[v]] to fixpoint (apps.h:100-110).
-
-    The changed-count rides the localCheckpoint job as an observed metric —
-    one Spark job per hop, not two.
-    """
-    from pyspark.sql import Observation
-
-    cur = cut_lineage(labels)
-    for hop_i in range(max_hops):
-        hop = maybe_broadcast(
-            cur.select(F.col("cid").alias("jcid"), F.col("new_label").alias("jlabel")),
-            num_coarse,
-            200_000,
-        )
-        obs = Observation(f"hz_jump_{hop_i}")
-        nxt = (
-            cur.join(hop, cur.new_label == hop.jcid, "left")
-            .select(
-                "cid",
-                F.coalesce("jlabel", "new_label").alias("new_label"),
-                (F.coalesce("jlabel", "new_label") != F.col("new_label")).alias("ch"),
-            )
-            .observe(obs, F.sum(F.col("ch").cast("long")).alias("changed"))
-        )
-        nxt = cut_lineage(nxt)
-        changed = int(obs.get.get("changed") or 0)
-        cur = nxt.select("cid", "new_label")
-        if changed == 0:
-            break
-    return cur
-
-
 def clustering(
     graph: Graph,
     num_clusters_hint: int = 100,
@@ -228,7 +196,7 @@ def clustering(
         moves = step(edges_w, vprops, m_all, threshold, num_coarse)
         moves = cut_lineage(moves)
         any_moved = moves.filter(F.col("moved")).count() > 0
-        labels = _pointer_jump(moves.select("cid", "new_label"), num_coarse)
+        labels = pointer_jump(moves.select("cid", "new_label"), "cid", "new_label", num_coarse)
 
         # dense pack in ascending label order (apps.h:113-123 std::map scan);
         # assign_dense_ids is the scalable range-partitioned pack, not a
@@ -237,7 +205,7 @@ def clustering(
             labels.select(F.col("new_label").alias("lbl")), ["lbl"], id_col="packed"
         )
         new_k = packed.count()
-        packed = maybe_broadcast(packed, new_k, 200_000)
+        packed = maybe_broadcast(packed, new_k)
         cmap = labels.join(packed, labels.new_label == packed.lbl).select(
             F.col("cid"), F.col("packed")
         )
@@ -245,7 +213,7 @@ def clustering(
         # checkpoint the projection so each reference is a leaf, not a
         # re-analyzed join plan (≥3-references trap, CLAUDE.md)
         cmap = cut_lineage(cmap)
-        cmap = maybe_broadcast(cmap, num_coarse, 200_000)
+        cmap = maybe_broadcast(cmap, num_coarse)
         assign = cut_lineage(
             assign.join(cmap, assign.coarse == cmap.cid)
             .select("vid", F.col("packed").alias("coarse"))

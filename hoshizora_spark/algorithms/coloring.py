@@ -52,7 +52,6 @@ def greedy_coloring(
     seed: int = 0,
     degree_order: bool = False,
     max_rounds: int = 200,
-    broadcast_vertices: int = 200_000,
 ) -> ColoringResult:
     """Deterministic proper coloring of the undirected simple graph;
     isolated vertices take color 0 in round 0.
@@ -64,7 +63,7 @@ def greedy_coloring(
     priorities at a comparable round count (52 vs 50 — degree gradients
     serialize their own chains, so rounds do NOT collapse; the win is
     coloring QUALITY). Costs one static degree join per round (broadcast
-    under ``broadcast_vertices``). Both modes are exactly replayable;
+    under ``BROADCAST_ROWS``). Both modes are exactly replayable;
     the succession-graph oracle pins the default mode."""
     if not (0 <= seed <= MAX_SEED):
         raise ValueError(f"seed must be in [0, {MAX_SEED}] (overflow-safe mix bound)")
@@ -94,21 +93,18 @@ def greedy_coloring(
             "vid", F.expr(mix_sql("vid", it, seed)).alias("p")
         )
         if degv is not None:
-            unc = unc.join(
-                maybe_broadcast(degv, V, broadcast_vertices), "vid", "left"
-            ).select("vid", F.coalesce("d", F.lit(0)).alias("d"), "p")
+            unc = unc.join(maybe_broadcast(degv, V), "vid", "left").select(
+                "vid", F.coalesce("d", F.lit(0)).alias("d"), "p"
+            )
         else:
             unc = unc.select("vid", F.lit(0).cast("long").alias("d"), "p")
         pri = cut_lineage(unc)
-        pri_b = maybe_broadcast(
-            pri.select(F.col("vid").alias("src"), "d", "p"), V, broadcast_vertices
-        )
+        pri_b = maybe_broadcast(pri.select(F.col("vid").alias("src"), "d", "p"), V)
         colored_b = maybe_broadcast(
             state.filter(F.col("color") >= 0).select(
                 F.col("vid").alias("src"), F.col("color").alias("c")
             ),
             V,
-            broadcast_vertices,
         )
         unc_msgs = sym.join(pri_b, "src").select(
             F.col("dst").alias("vid"),
@@ -150,7 +146,7 @@ def greedy_coloring(
                 )
             ).alias("newc"),
         )
-        win_b = maybe_broadcast(win, V, broadcast_vertices)
+        win_b = maybe_broadcast(win, V)
         return state.join(win_b, "vid", "left").select(
             "vid",
             F.when(F.col("color") >= 0, F.col("color"))

@@ -48,7 +48,6 @@ def densest_subgraph(
     graph: Graph,
     eps: float = 0.1,
     max_rounds: int = 200,
-    broadcast_rows: int = 200_000,
 ) -> DensestResult:
     """Peel the undirected simple view of ``graph``; returns the densest
     surviving induced subgraph (ties -> earliest round). S starts as the
@@ -87,11 +86,11 @@ def densest_subgraph(
         )
         thr = 2.0 * (1.0 + eps) * rho
         S = cut_lineage(
-            S.join(maybe_broadcast(deg, V, broadcast_rows), "vid", "left")
+            S.join(maybe_broadcast(deg, V), "vid", "left")
             .filter(F.coalesce("deg", F.lit(0)) > thr)
             .select("vid")
         )
-        keep = maybe_broadcast(S, V, broadcast_rows)
+        keep = maybe_broadcast(S, V)
         live = cut_lineage(
             live.join(keep.select(F.col("vid").alias("a")), "a", "semi").join(
                 keep.select(F.col("vid").alias("b")), "b", "semi"

@@ -53,7 +53,6 @@ def smoothed_pagerank(
     beta: float = 0.5,
     tol: float | None = 1e-6,
     max_iters: int = 400,
-    broadcast_vertices: int = 200_000,
 ) -> EdgeStatePageRankResult:
     """PageRank via per-edge smoothed messages (see module docstring).
 
@@ -91,9 +90,7 @@ def smoothed_pagerank(
         )
 
     def step(es: DataFrame, it: int) -> DataFrame:
-        r_src = maybe_broadcast(
-            ranks_of(es).select(F.col("vid").alias("src"), "r"), V, broadcast_vertices
-        )
+        r_src = maybe_broadcast(ranks_of(es).select(F.col("vid").alias("src"), "r"), V)
         # gather(prev_val, curr): the per-edge update reads BOTH the edge's
         # previous value (es.m) and the fresh src contribution (r·w)
         return es.join(r_src, "src").select(

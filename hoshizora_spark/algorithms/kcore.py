@@ -60,6 +60,7 @@ class KCoreResult:
     coreness: DataFrame  # (vid: long, coreness: long) over the full domain
     max_core: int
     rounds: int
+    converged: bool  # False when max_rounds cut the run short
     wall_ms_per_round: list[float] | None = None
     changed_per_round: list[int] | None = None
 
@@ -76,10 +77,12 @@ def k_core(graph: Graph, max_rounds: int = 10_000) -> KCoreResult:
 
     k = 1
     rounds = 0
+    converged = False
     while rounds < max_rounds:
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         alive = deg.count()
         if alive == 0:
+            converged = True
             break
         peel = deg.filter(F.col("deg") < k).select("src")
         n_peel = peel.count()
@@ -98,14 +101,14 @@ def k_core(graph: Graph, max_rounds: int = 10_000) -> KCoreResult:
         # Broadcast gate = the measured 200k driver-serialization ceiling
         # (maybe_broadcast); a multi-million-row peel wave goes through a
         # shuffle anti-join instead of stalling the driver.
-        peel_b = maybe_broadcast(peel, n_peel, 200_000)
+        peel_b = maybe_broadcast(peel, n_peel)
         edges = (
             edges.join(peel_b.withColumnRenamed("src", "p"), edges.src == F.col("p"), "left_anti")
         )
-        peel_dst_b = maybe_broadcast(peel.withColumnRenamed("src", "p"), n_peel, 200_000)
+        peel_dst_b = maybe_broadcast(peel.withColumnRenamed("src", "p"), n_peel)
         edges = edges.join(peel_dst_b, edges.dst == F.col("p"), "left_anti")
         edges = edges.localCheckpoint(eager=True)
-    return KCoreResult(coreness=result, max_core=k - 1, rounds=rounds)
+    return KCoreResult(coreness=result, max_core=k - 1, rounds=rounds, converged=converged)
 
 
 class HIndexKernel(KeyedKernel):
@@ -147,6 +150,7 @@ def _hindex(graph, sym, edges, max_rounds) -> KCoreResult:
         coreness=coreness,
         max_core=int(mx or 0),
         rounds=res.iterations,
+        converged=res.converged,
         wall_ms_per_round=res.wall_ms,
         changed_per_round=res.stats,
     )

@@ -53,7 +53,6 @@ def maximal_independent_set(
     graph: Graph,
     seed: int = 0,
     max_rounds: int = 100,
-    broadcast_vertices: int = 200_000,
 ) -> MisResult:
     if not (0 <= seed <= MAX_SEED):
         raise ValueError(f"seed must be in [0, {MAX_SEED}] (overflow-safe mix bound)")
@@ -74,9 +73,7 @@ def maximal_independent_set(
                 "vid", F.expr(mix_sql("vid", it, seed)).alias("p")
             )
         )
-        pri_b = maybe_broadcast(
-            pri.select(F.col("vid").alias("src"), "p"), V, broadcast_vertices
-        )
+        pri_b = maybe_broadcast(pri.select(F.col("vid").alias("src"), "p"), V)
         msgs = sym.join(pri_b, "src").select(
             F.col("dst").alias("vid"),
             F.struct("p", F.col("src").alias("vid")).alias("m"),
@@ -98,9 +95,7 @@ def maximal_independent_set(
                 & (F.col("nbr").isNull() | (F.col("own") > F.col("nbr")))
             ).select("vid")
         )
-        mis_b = maybe_broadcast(
-            mis.select(F.col("vid").alias("src")), V, broadcast_vertices
-        )
+        mis_b = maybe_broadcast(mis.select(F.col("vid").alias("src")), V)
         rem = sym.join(mis_b, "src").select(F.col("dst").alias("vid")).distinct()
         upd = (
             mis.select("vid", F.lit(1).alias("u"))
@@ -108,7 +103,7 @@ def maximal_independent_set(
             .groupBy("vid")
             .agg(F.min("u").alias("u"))  # MIS and removed never collide; min is belt+braces
         )
-        upd_b = maybe_broadcast(upd, V, broadcast_vertices)
+        upd_b = maybe_broadcast(upd, V)
         return state.join(upd_b, "vid", "left").select(
             "vid",
             F.when(F.col("st") != 0, F.col("st"))

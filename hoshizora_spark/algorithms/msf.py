@@ -17,8 +17,8 @@ different components):
      order every cycle of the hook map is a mutual 2-cycle; the smaller
      id of each pair becomes its own root
   3. pointer-jump parent = parent(parent) to the root (the hook table is
-     component-sized and halves every round; jump count is
-     log2(chain length), checked with one small count per jump)
+     component-sized and halves every round; ``pointer_jump`` runs
+     log2(chain length) hops, one job each)
   4. relabel: vertices map comp -> root (one broadcast/shuffle-hash
      join), live edges re-endpoint and drop intra-component rows — the
      live table CONTRACTS geometrically, so round r processes only the
@@ -34,7 +34,6 @@ map-side-combinable shuffle keyed by component.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -42,6 +41,7 @@ from pyspark.sql import functions as F
 
 from hoshizora_spark.graph.core import Graph, maybe_broadcast
 from hoshizora_spark.runtime.checkpoint import cut_lineage
+from hoshizora_spark.runtime.jump import pointer_jump
 
 
 @dataclass
@@ -56,7 +56,6 @@ def minimum_spanning_forest(
     graph: Graph,
     weight_col: str | None = None,
     max_rounds: int = 64,
-    broadcast_rows: int = 200_000,
 ) -> MsfResult:
     """Borůvka MSF of the undirected simple view of ``graph``. Parallel
     / reverse duplicate edges collapse to their minimum weight;
@@ -83,7 +82,6 @@ def minimum_spanning_forest(
         und.select(F.col("a").alias("ca"), F.col("b").alias("cb"), "w", "a", "b")
     )
     comp = cut_lineage(graph.vertices().select("vid", F.col("vid").alias("c")))
-    jump_cap = max(1, math.ceil(math.log2(max(V, 2))) + 1)
     picked: list[DataFrame] = []
     rounds = 0
     converged = False
@@ -119,22 +117,9 @@ def minimum_spanning_forest(
                 .alias("p"),
             )
         )
-        for _j in range(jump_cap):
-            hop = par.select(F.col("cu").alias("c2"), F.col("p").alias("p2"))
-            nxt = cut_lineage(
-                par.join(maybe_broadcast(hop, V, broadcast_rows), F.col("p") == F.col("c2"), "left")
-                .select("cu", F.coalesce("p2", "p").alias("p"))
-            )
-            if nxt.join(par.select("cu", F.col("p").alias("p0")), "cu").filter(
-                F.col("p") != F.col("p0")
-            ).limit(1).count() == 0:
-                par = nxt
-                break
-            par = nxt
+        par = pointer_jump(par, "cu", "p", V)
         root = maybe_broadcast(
-            par.select(F.col("cu").alias("rc"), F.col("p").alias("rp")),
-            V,
-            broadcast_rows,
+            par.select(F.col("cu").alias("rc"), F.col("p").alias("rp")), V
         )
         comp = cut_lineage(
             comp.join(root, F.col("c") == F.col("rc"), "left").select(

@@ -239,7 +239,6 @@ def personalized_pagerank(
     sources: list[int],
     tol: float | None = 1e-6,
     max_iters: int = 200,
-    broadcast_vertices: int = 200_000,
 ) -> PageRankResult:
     """Teleport-set PageRank (``PersonalizedPageRankKernel``) on the
     DataFrame engine — the standard "related files to this seed set" query
@@ -251,7 +250,7 @@ def personalized_pagerank(
     # out-of-domain seeds would silently inflate |S| (base = 0.15/|S|)
     # while never receiving teleport mass — every rank biases low
     kernel = PersonalizedPageRankKernel(dense_sources(sources, V, "personalized_pagerank"))
-    ef = DfEdges.cache(_weighted_edges(graph), V, broadcast_vertices)
+    ef = DfEdges.cache(_weighted_edges(graph), V)
     res = run_kernel(graph, kernel, ef, tol=tol, max_iters=max_iters)
     return _result(res, ef.num_edges)
 

@@ -59,7 +59,6 @@ class TrussResult:
 def k_truss(
     graph: Graph,
     max_rounds: int = 200,
-    broadcast_edges: int = 200_000,
 ) -> TrussResult:
     """Trussness per canonical undirected simple edge (a < b)."""
     spark = graph.spark
@@ -114,9 +113,7 @@ def k_truss(
     entry_type = "struct<c:bigint,cnt:bigint>"
 
     def step(state: DataFrame, it: int) -> DataFrame:
-        st = maybe_broadcast(
-            state.select("a", "b", "t"), n_tri_edges, broadcast_edges
-        )
+        st = maybe_broadcast(state.select("a", "b", "t"), n_tri_edges)
         per_tri = (
             members.join(st, ["a", "b"])
             .groupBy("x", "y", "z")

@@ -103,7 +103,6 @@ def random_walks(
     walk_length: int = 8,
     walks_per_vertex: int = 2,
     seed: int = 0,
-    broadcast_vertices: int = 200_000,
 ) -> WalkResult:
     """Deterministic uniform out-edge walks from every vertex.
 
@@ -129,7 +128,7 @@ def random_walks(
     deg = graph.out_degrees.select(
         F.col("src").alias("cur"), F.col("out_deg").alias("deg")
     )
-    deg_b = maybe_broadcast(deg, V, broadcast_vertices)
+    deg_b = maybe_broadcast(deg, V)
 
     state = cut_lineage(
         graph.vertices()

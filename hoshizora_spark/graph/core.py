@@ -95,7 +95,9 @@ def cache_superstep_edges(
 BROADCAST_ROWS = 200_000
 
 
-def maybe_broadcast(df: DataFrame, num_rows: int, threshold: int) -> DataFrame:
+def maybe_broadcast(
+    df: DataFrame, num_rows: int, threshold: int = BROADCAST_ROWS
+) -> DataFrame:
     """Broadcast-hint ``df`` when its row count is known to be small.
 
     Per-superstep joins of a V-row state table against an E-row edge table

@@ -61,6 +61,7 @@ from hoshizora_spark.graph.core import (
 )
 from hoshizora_spark.graph.csr import CsrBlocks
 from hoshizora_spark.runtime.checkpoint import CheckpointManager
+from hoshizora_spark.runtime.jump import jump
 from hoshizora_spark.runtime.skew import salted_join_edges_state
 from hoshizora_spark.runtime.superstep import LoopResult, bsp_loop
 
@@ -90,6 +91,7 @@ class VectorKernel:
 
     combine: str  # 'sum' | 'min' | 'max' — the zero+sum monoid
     state_type = "double"  # Spark type of the vertex state column
+    jumps = False  # one pointer-jump hop (runtime/jump.py) after each fold
 
     def init(self, vertices: DataFrame) -> DataFrame:
         """Iteration-0 (vid, val) frame over ``vertices`` (vid: long) —
@@ -534,7 +536,8 @@ def run_kernel(
     """Run ``kernel`` to convergence on either engine; state starts from
     ``kernel.init`` and comes back as (vid, val). ``edges`` picks the
     engine: ``DfEdges`` → ``df_step`` (released after the loop),
-    ``CsrBlocks`` → ``gas_step``.
+    ``CsrBlocks`` → ``gas_step``. A kernel with ``jumps`` set gets one
+    pointer-jump hop on the folded labels every superstep.
 
     The convergence statistic follows the fold: a sum converges
     numerically (max|Δ| ≤ ``tol``; ``tol=None`` runs ``max_iters``), while
@@ -548,7 +551,8 @@ def run_kernel(
         return init_state(spark, edges, kernel) if csr else kernel.init(graph.vertices())
 
     def step(state: DataFrame, it: int) -> DataFrame:
-        return gas_step(edges, state, kernel) if csr else df_step(edges, state, kernel)
+        nxt = gas_step(edges, state, kernel) if csr else df_step(edges, state, kernel)
+        return jump(nxt, "vid", "new_val", graph.num_vertices) if kernel.jumps else nxt
 
     new, old = F.col("new_val"), F.col("old_val")
     if kernel.combine == "sum":

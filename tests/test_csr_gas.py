@@ -8,7 +8,6 @@ import pytest
 from hoshizora_spark import (
     Graph,
     build_csr_blocks,
-    connected_components_csr,
     edges_from_pairs,
     pagerank,
     pagerank_csr,
@@ -35,18 +34,6 @@ def test_pagerank_csr_matches_oracle(spark, name):
     got = np.array([rows[i] for i in range(g.num_vertices)])
     want = oracle.pagerank(edges, tol=1e-9)
     assert np.allclose(got, want, atol=1e-6), f"{name}: max err {np.abs(got - want).max()}"
-
-
-@pytest.mark.parametrize("name", ["g4_two_triangles_bridge", "g5_multi_dup_isolated"])
-def test_cc_csr_matches_oracle(spark, name):
-    edges = ALL_FIXTURES[name]
-    g = _graph(spark, name)
-    res = connected_components_csr(g)
-    assert res.converged
-    rows = {r["vid"]: r["label"] for r in res.labels.collect()}
-    got = np.array([rows[i] for i in range(g.num_vertices)])
-    want = oracle.connected_components(edges)
-    assert (got == want).all(), f"{name}: {got} != {want}"
 
 
 def test_csr_block_invariants(spark):

@@ -1,9 +1,9 @@
 """One kernel, two engines: every kernel ``run_kernel`` serves answers the
 same on the DataFrame engine and the CSR-block engine.
 
-Min kernels (BFS, SSSP, CC) must agree exactly; keyed kernels (LPA,
-k-core h-index) exactly and in the same number of rounds, converged or
-not (g7_bipartite is LPA's oscillator); sum kernels (PageRank, weighted
+Min kernels (BFS, SSSP) must agree exactly; CC and the keyed kernels
+(LPA, k-core h-index) exactly and in the same number of rounds, converged
+or not (g7_bipartite is LPA's oscillator); sum kernels (PageRank, weighted
 PageRank, PPR) to 1e-12 relative — Spark does not pin the merge order of
 a double sum, and the CSR engine folds per block first. Both engines must
 also report one convergence statistic and one wall time per superstep
@@ -20,6 +20,7 @@ from hoshizora_spark import (
     bfs_distances_csr,
     connected_components,
     connected_components_csr,
+    edges_from_pairs,
     k_core_hindex,
     k_core_hindex_csr,
     label_propagation,
@@ -67,7 +68,7 @@ KERNELS = {
         lambda g: sssp_distances_csr(g, [0], directed=False),
         "distances", "dist", "exact",
     ),
-    "cc": (connected_components, connected_components_csr, "labels", "label", "exact"),
+    "cc": (connected_components, connected_components_csr, "labels", "label", "rounds"),
     "lpa": (
         lambda g: label_propagation(g, max_rounds=10),
         lambda g: label_propagation_csr(g, max_rounds=10),
@@ -109,7 +110,15 @@ def test_csr_engine_equals_df_engine(spark, kernel, name):
         assert got == want, f"{kernel}/{name}: {got} != {want}"
     if check == "exact":
         assert df_res.converged and csr_res.converged
-    if check == "rounds":  # KCoreResult has no converged flag
-        conv = [getattr(r, "converged", None) for r in (df_res, csr_res)]
-        assert df_res.rounds == csr_res.rounds and conv[0] == conv[1]
+    if check == "rounds":
+        assert (df_res.rounds, df_res.converged) == (csr_res.rounds, csr_res.converged)
     assert _trace_consistent(df_res) and _trace_consistent(csr_res)
+
+
+def test_cc_pointer_jump_on_in_order_path(spark):
+    """In-order path 0-1-…-299: one hop per round, ≤ 12 rounds on both engines, not ~300."""
+    g = Graph.from_edges(edges_from_pairs(spark, [(i, i + 1) for i in range(299)]))
+    res = [cc(g, max_rounds=20) for cc in (connected_components, connected_components_csr)]
+    for r in res:
+        assert r.converged and {x["label"] for x in r.labels.collect()} == {0}
+    assert res[0].rounds == res[1].rounds <= 12

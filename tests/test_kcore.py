@@ -21,7 +21,7 @@ def test_k_core_matches_oracle(spark, name):
     got = np.array([rows[i] for i in range(g.num_vertices)])
     want = oracle.k_core(edges)
     assert (got == want).all(), f"{name}: {got} != {want}"
-    assert res.max_core == int(want.max())
+    assert res.max_core == int(want.max()) and res.converged
 
 
 def test_k_core_triangle_with_tail(spark):
@@ -42,7 +42,16 @@ def test_k_core_hindex_matches_oracle(spark, name):
     got = np.array([rows[i] for i in range(g.num_vertices)])
     want = oracle.k_core(edges)
     assert (got == want).all(), f"{name}: {got} != {want}"
-    assert res.max_core == int(want.max())
+    assert res.max_core == int(want.max()) and res.converged
+
+
+def test_k_core_truncated_is_not_converged(spark):
+    """A 12-vertex path needs > 2 rounds on every k-core path: a capped run says so."""
+    from hoshizora_spark.algorithms.kcore import k_core_hindex, k_core_hindex_csr
+
+    g = Graph.from_edges(edges_from_pairs(spark, [(i, i + 1) for i in range(11)]))
+    for fn in (k_core, k_core_hindex, k_core_hindex_csr):
+        assert fn(g, max_rounds=2).converged is False, fn.__name__
 
 
 def test_k_core_hindex_fewer_rounds_than_peeling(spark):

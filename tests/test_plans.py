@@ -379,3 +379,25 @@ def test_msf_round_plan_shape(spark):
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
     assert "HashAggregate" in plan
+
+
+def test_cc_superstep_plan_shape(spark, monkeypatch):
+    """One CC superstep per engine (min fold + one pointer-jump hop): no
+    row-at-a-time Python, Arrow on CSR, and the hop's self-join hinted
+    like every per-superstep join (broadcast here, never sort-merge)."""
+    import hoshizora_spark.runtime.gas as G
+    from hoshizora_spark import connected_components, connected_components_csr
+
+    plans, real = [], G.bsp_loop
+
+    def spy(spark_, **kw):
+        plans.append(_plan(kw["step"](kw["init"](), 0)))
+        return real(spark_, **kw)
+
+    monkeypatch.setattr(G, "bsp_loop", spy)
+    for cc in (connected_components, connected_components_csr):
+        cc(_graph(spark), max_rounds=1)
+    for plan in plans:
+        assert "BatchEvalPython" not in plan and "SortMergeJoin" not in plan
+        assert any("BroadcastHashJoin" in ln and "LeftOuter" in ln for ln in plan.splitlines())
+    assert "FlatMapGroupsInPandas" in plans[1]
