@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -15,7 +14,6 @@ from hoshizora_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_DRIVER_MEM", "6g")  # the 48g default can outgrow the host
     s = get_spark(app_name="hoshizora_spark_tests", master="local[4]", shuffle_partitions=4)
     yield s
 
