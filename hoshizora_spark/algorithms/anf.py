@@ -39,7 +39,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hoshizora_spark.graph.core import Graph, maybe_broadcast, symmetrize
+from hoshizora_spark.graph.core import (
+    Graph,
+    cache_superstep_edges,
+    maybe_broadcast,
+    symmetrize,
+)
 from hoshizora_spark.runtime.superstep import bsp_loop
 
 MAX_EXACT_VERTICES = 16_384  # fixpoint state ≤ V²/64 ≈ 4.2M rows
@@ -84,8 +89,7 @@ def neighborhood_function(
             f"neighborhood_function: exact bitsets are O(V^2/64) state; "
             f"V={V} > {MAX_EXACT_VERTICES}. Use neighborhood_function_hll."
         )
-    edges = _edge_view(graph, directed)
-    E = edges.count()
+    edges, key_type, E = cache_superstep_edges(_edge_view(graph, directed), V)
     W = (V + 63) // 64
 
     def init() -> DataFrame:
@@ -101,11 +105,11 @@ def neighborhood_function(
 
     def step(state: DataFrame, it: int) -> DataFrame:
         st_src = maybe_broadcast(
-            state.select(F.col("vid").alias("src"), "pos", "word"),
+            state.select(F.col("vid").cast(key_type).alias("src"), "pos", "word"),
             V * W,  # worst-case row bound (monotone growth toward it)
         )
         msgs = edges.join(st_src, "src").select(
-            F.col("dst").alias("vid"), "pos", "word"
+            F.col("dst").cast("long").alias("vid"), "pos", "word"
         )
         # absent (vid, pos) rows are bit_or's identity — the carrier is the
         # state itself, and the ONE groupBy is both merge and apply
@@ -132,6 +136,7 @@ def neighborhood_function(
         edges_per_iter=E,
         metric_kind="changed",
     )
+    edges.unpersist()
     n_per_h = [float(V)] + [float(s) for s in res.stats]
     # the final round's stat equals its predecessor (that is what stopped
     # the loop) — drop the duplicate so nf rows are the distinct h ladder
@@ -187,8 +192,7 @@ def neighborhood_function_hll(
         raise ValueError(f"neighborhood_function_hll: m must be a power of two >= 16, got {m}")
     spark = graph.spark
     V = graph.num_vertices
-    edges = _edge_view(graph, directed)
-    E = edges.count()
+    edges, key_type, E = cache_superstep_edges(_edge_view(graph, directed), V)
     m_f = float(m)
     alpha = _alpha(m)
 
@@ -202,9 +206,11 @@ def neighborhood_function_hll(
         )
 
     def step(state: DataFrame, it: int) -> DataFrame:
-        st_src = maybe_broadcast(state.select(F.col("vid").alias("src"), "reg", "rho"), V * m)
+        st_src = maybe_broadcast(
+            state.select(F.col("vid").cast(key_type).alias("src"), "reg", "rho"), V * m
+        )
         msgs = edges.join(st_src, "src").select(
-            F.col("dst").alias("vid"), "reg", "rho"
+            F.col("dst").cast("long").alias("vid"), "reg", "rho"
         )
         return msgs.unionByName(state).groupBy("vid", "reg").agg(
             F.max("rho").alias("rho")
@@ -245,6 +251,7 @@ def neighborhood_function_hll(
         edges_per_iter=E,
         metric_kind="delta",
     )
+    edges.unpersist()
     # N(0): every sketch holds exactly its own vertex; with the linear-
     # counting correction that estimates ~V, but report the true V (known)
     n_per_h = [float(V)] + [float(s) for s in res.stats]

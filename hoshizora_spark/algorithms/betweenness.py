@@ -97,8 +97,7 @@ def betweenness_centrality(
         if directed
         else symmetrize(graph.edges)
     )
-    E = edges.count()
-    edges, key_type = cache_superstep_edges(spark, edges, V, E)
+    edges, key_type, E = cache_superstep_edges(edges, V)
 
     sources = graph.vertices()
     if sample_mod is not None and sample_mod > 1:

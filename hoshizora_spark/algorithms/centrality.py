@@ -74,8 +74,7 @@ def harmonic_centrality(
             f"{MAX_EXACT_VERTICES}. Use harmonic_centrality_hll."
         )
     edges = _edge_view(graph, directed)
-    E = edges.count()
-    edges, key_type = cache_superstep_edges(spark, edges, V, E)
+    edges, key_type, E = cache_superstep_edges(edges, V)
 
     def init() -> DataFrame:
         return graph.vertices().select(
@@ -204,8 +203,7 @@ def hits(
     spark = graph.spark
     V = graph.num_vertices
     edges = graph.edges.select("src", "dst") if directed else symmetrize(graph.edges)
-    E = edges.count()
-    edges, key_type = cache_superstep_edges(spark, edges, V, E)
+    edges, key_type, E = cache_superstep_edges(edges, V)
     nil = F.lit(None).cast("double")
 
     def init() -> DataFrame:
@@ -298,8 +296,7 @@ def harmonic_centrality_hll(
     spark = graph.spark
     V = graph.num_vertices
     edges = _edge_view(graph, directed)
-    E = edges.count()
-    edges, key_type = cache_superstep_edges(spark, edges, V, E)
+    edges, key_type, E = cache_superstep_edges(edges, V)
     m_f = float(m)
     alpha = _alpha(m)
 

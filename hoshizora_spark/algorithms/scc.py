@@ -86,7 +86,6 @@ def strongly_connected_components(
     max_outer: int = 64,
     max_inner: int = 256,
 ) -> SccResult:
-    spark = graph.spark
     V = graph.num_vertices
     base = graph.edges.select("src", "dst").distinct()
     labels = cut_lineage(
@@ -108,8 +107,9 @@ def strongly_connected_components(
             .join(act_b.withColumnRenamed("vid", "dst"), "dst", "left_semi")
             .select("src", "dst")
         )
-        E = edges.count()
+        edges, key_type, E = cache_superstep_edges(edges, V)
         if E == 0:
+            edges.unpersist()
             # no edges left: every remaining vertex is a singleton SCC
             labels = cut_lineage(
                 labels.select("vid", F.coalesce("scc", "vid").alias("scc"))
@@ -117,7 +117,6 @@ def strongly_connected_components(
             extracted_per_round.append(remaining)
             converged = True
             break
-        edges, key_type = cache_superstep_edges(spark, edges, V, E)
 
         # 1. TRIM (one pass): zero in- or out-degree in the active subgraph
         outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od"))

@@ -68,6 +68,11 @@ def _stem(path_col):
 
 @dataclass
 class GraphBundle:
+    """The built corpus graph. ``vertices`` and ``edges`` come back
+    persisted and materialized, so every later read of the graph scans the
+    cache instead of re-running the split/explode/regexp pipeline; the
+    caller releases both (``unpersist``) when done with the graph."""
+
     vertices: DataFrame  # (vid, repo, path)
     edges: DataFrame  # (src, dst) — multi-edges kept (one per import line)
     graph: Graph
@@ -80,7 +85,8 @@ def build_graph_from_corpus(corpus: DataFrame) -> GraphBundle:
     vertices = assign_dense_ids(corpus, ["repo", "path"], id_col="vid").persist()
     num_vertices = vertices.count()
 
-    refs = reference_lines(corpus)
+    # persisted: counted here, then joined into the edges
+    refs = reference_lines(corpus).persist()
     n_refs = refs.count()
 
     src_side = vertices.select(
@@ -107,8 +113,9 @@ def build_graph_from_corpus(corpus: DataFrame) -> GraphBundle:
         dst_by_stem,
         (F.col("ref_repo") == dst_by_stem.d_repo) & (F.col("ref_stem") == dst_by_stem.d_stem),
     ).select("src", "dst")
-    edges = by_path.union(by_stem)
+    edges = by_path.union(by_stem).persist()
     num_edges = edges.count()
+    refs.unpersist()
 
     graph = Graph(edges=edges, num_vertices=num_vertices)
     return GraphBundle(

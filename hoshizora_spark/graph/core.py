@@ -13,6 +13,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import cached_property
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,8 +56,8 @@ def sized_partitions(spark: SparkSession, num_rows: int, rows_per_partition: int
 
 
 def cache_superstep_edges(
-    spark: SparkSession, edges: DataFrame, num_vertices: int, num_edges: int
-) -> tuple[DataFrame, str]:
+    edges: DataFrame, num_vertices: int
+) -> tuple[DataFrame, str, int]:
     """Persist a BSP loop's static edge operand with a scan-friendly layout.
 
     Every superstep re-scans this frame, so its in-memory layout is the
@@ -66,28 +67,41 @@ def cache_superstep_edges(
     columnar cache's delta/RLE codecs compress the src run. Pre-partitioned
     on src so the per-superstep state join never re-shuffles this side.
 
-    Returns (cached frame, key type name) — steps must cast the state's vid
-    to the key type on the join side and cast message vids back to long.
+    Returns (cached frame, key type name, edge count E) — steps must cast
+    the state's vid to the key type on the join side and cast message vids
+    back to long. The view's upstream plan runs ONCE: the view is staged in
+    the cache and counted (E sizes the partitioning), the layout is built
+    and materialized from the staged copy, and the staged copy is released
+    (unless the caller had cached the view already).
+    Never ``count()`` a view and then pass it here — that runs it twice.
 
     PRECONDITION (dense domain): every src/dst id lies in
     ``[0, num_vertices)``. ``num_vertices`` is trusted as the bound — a
     Graph constructed with an inconsistent explicit ``num_vertices`` whose
-    real ids exceed int32 fails the ANSI cast mid-loop rather than here
-    (validating would cost a full edge scan per loop). Construct with
-    ``Graph.from_edges(..., validate=True)`` to pay that scan once up
-    front when the input isn't trusted.
+    real ids exceed int32 fails the ANSI cast here rather than at
+    construction (validating would cost a full edge scan per loop).
+    Construct with ``Graph.from_edges(..., validate=True)`` to pay that
+    scan once up front when the input isn't trusted.
     """
-    compact = num_vertices - 1 <= 2**31 - 1
-    if compact:
-        edges = edges.select(
+    # a view the caller already cached is read from that cache and kept
+    owned = edges.storageLevel == StorageLevel.NONE
+    staged = edges.persist()
+    try:
+        num_edges = staged.count()
+        key_type = "int" if num_vertices - 1 <= 2**31 - 1 else "long"
+        view = staged.select(
             *[
-                F.col(c).cast("int").alias(c) if c in ("src", "dst") else F.col(c)
-                for c in edges.columns
+                F.col(c).cast(key_type).alias(c) if c in ("src", "dst") else F.col(c)
+                for c in staged.columns
             ]
         )
-    n_part = sized_partitions(spark, num_edges)
-    cached = edges.repartition(n_part, "src").sortWithinPartitions("src").persist()
-    return cached, ("int" if compact else "long")
+        n_part = sized_partitions(view.sparkSession, num_edges)
+        cached = view.repartition(n_part, "src").sortWithinPartitions("src").persist()
+        cached.count()
+    finally:
+        if owned:
+            staged.unpersist()
+    return cached, key_type, num_edges
 
 
 # Largest state side a per-superstep join broadcasts: above it the driver
@@ -142,8 +156,8 @@ class Graph:
         compaction — ``cache_superstep_edges`` — relies on it as the
         bound). ``validate=True`` pays one edge scan to check it at
         construction time instead of failing with an ANSI cast error
-        mid-loop; leave it off when the ids come from a builder that
-        guarantees the domain (e.g. ``compact_ids``).
+        when a loop caches its edges; leave it off when the ids come from
+        a builder that guarantees the domain (e.g. ``compact_ids``).
         """
         edges = edges.select(
             F.col("src").cast("long").alias("src"),

@@ -5,15 +5,16 @@ persists vertex state so a run can resume mid-convergence. Layout:
 
     <base>/<algo>/<run_id>/iter=<k>/state/     vertex-state parquet
     <base>/<algo>/<run_id>/iter=<k>/lineage/   (iter, partition_id, rows, fingerprint)
-    <base>/<algo>/<run_id>/metrics/            append-mode parquet, one row per superstep
+    <base>/<algo>/<run_id>/metrics/            one driver-written parquet file per superstep
 
 On a cluster ``base`` would be an Iceberg warehouse path; parquet-on-dir is
 the same write shape (atomic per-iteration directory + _SUCCESS marker).
 ``base_dir`` takes any ``scheme://`` path: the Spark reads/writes pass it
-through, and the driver-side ``_DONE`` markers / ``latest_iter`` scan go
-through the same scheme-detected ``pyarrow.fs`` abstraction as the CSR
-sidecar store (graph/csr.py ``_fs_for`` — bare path → LocalFileSystem,
-``hdfs://``/``s3://``/``file://`` via ``FileSystem.from_uri``).
+through, and the driver-side ``_DONE`` markers, metrics rows and
+``latest_iter`` scan go through the same scheme-detected ``pyarrow.fs``
+abstraction as the CSR sidecar store (graph/csr.py ``_fs_for`` — bare
+path → LocalFileSystem, ``hdfs://``/``s3://``/``file://`` via
+``FileSystem.from_uri``).
 The reference has no analogue — it mutates a double-buffered array in place
 (core/graph.h:431-435); checkpointing is what replaces that on Spark, and it
 also cuts DataFrame lineage so analyzer cost stays O(1) per superstep.
@@ -121,29 +122,39 @@ class CheckpointManager:
 
     def append_metrics(
         self,
-        spark: SparkSession,
         it: int,
         edges_processed: int,
         wall_ms: float,
         max_abs_delta: float | None,
         changed: int | None,
     ) -> None:
-        row = [
-            (
-                self.run_id,
-                it,
-                int(edges_processed),
-                float(wall_ms),
-                float(max_abs_delta) if max_abs_delta is not None else None,
-                int(changed) if changed is not None else None,
-            )
-        ]
-        df = spark.createDataFrame(
-            row,
-            schema="run_id string, iter int, edges_processed long, wall_ms double,"
-            " max_abs_delta double, changed long",
+        """Write superstep ``it``'s metrics row as its own parquet file.
+
+        A driver-side pyarrow write, like ``_DONE``: no Spark job, and no
+        Python worker for a one-row ``createDataFrame``. The file lands
+        under a hidden name first and is renamed into place, so a reader
+        never sees a half-written part (Spark skips ``.``-prefixed files).
+        """
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = pa.schema(
+            [
+                ("run_id", pa.string()),
+                ("iter", pa.int32()),
+                ("edges_processed", pa.int64()),
+                ("wall_ms", pa.float64()),
+                ("max_abs_delta", pa.float64()),
+                ("changed", pa.int64()),
+            ]
         )
-        df.write.mode("append").parquet(f"{self.root}/metrics")
+        values = (self.run_id, it, edges_processed, wall_ms, max_abs_delta, changed)
+        table = pa.Table.from_pylist([dict(zip(schema.names, values))], schema=schema)
+        filesystem, p = _fs_for(f"{self.root}/metrics")
+        filesystem.create_dir(p, recursive=True)
+        name = f"part-{it:05d}-{uuid.uuid4().hex}.parquet"
+        pq.write_table(table, f"{p}/.{name}", filesystem=filesystem)
+        filesystem.move(f"{p}/.{name}", f"{p}/{name}")
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(f"{self.root}/metrics")

@@ -471,10 +471,7 @@ class DfEdges:
         hot: DataFrame | None = None,
         num_salts: int = 16,
     ) -> "DfEdges":
-        E = edges.count()
-        cached, key_type = cache_superstep_edges(
-            edges.sparkSession, edges, num_vertices, E
-        )
+        cached, key_type, E = cache_superstep_edges(edges, num_vertices)
         return DfEdges(cached, key_type, num_vertices, E, broadcast_vertices, hot, num_salts)
 
     def unpersist(self) -> None:

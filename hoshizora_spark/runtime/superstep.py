@@ -98,7 +98,6 @@ def bsp_loop(
         walls.append(wall)
         if checkpoint is not None:
             checkpoint.append_metrics(
-                spark,
                 it,
                 edges_per_iter,
                 wall,

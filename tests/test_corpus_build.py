@@ -69,13 +69,19 @@ def test_dense_ids_are_dense_and_ordered(spark, corpus):
 def test_build_graph_from_corpus(corpus):
     bundle = build_graph_from_corpus(corpus)
     assert bundle.num_vertices == 32
-    assert bundle.num_edges > 0
+    # every import line resolves to exactly one edge
+    assert bundle.num_edges == reference_lines(corpus).count() > 0
     assert bundle.unresolved_refs == 0  # synthesizer only emits resolvable refs
+    # built once: later reads of the graph scan the cache, not the regexps
+    assert bundle.edges.is_cached and bundle.vertices.is_cached
+    assert bundle.edges.storageLevel.useMemory
     mx = bundle.edges.agg(F.max(F.greatest("src", "dst"))).first()[0]
     mn = bundle.edges.agg(F.min(F.least("src", "dst"))).first()[0]
     assert 0 <= mn and mx < 32
     # no self-imports by construction
     assert bundle.edges.filter(F.col("src") == F.col("dst")).count() == 0
+    bundle.edges.unpersist()
+    bundle.vertices.unpersist()
 
 
 def test_pagerank_on_corpus_graph(corpus):

@@ -401,3 +401,40 @@ def test_cc_superstep_plan_shape(spark, monkeypatch):
         assert "BatchEvalPython" not in plan and "SortMergeJoin" not in plan
         assert any("BroadcastHashJoin" in ln and "LeftOuter" in ln for ln in plan.splitlines())
     assert "FlatMapGroupsInPandas" in plans[1]
+
+
+def test_cache_superstep_edges_runs_view_once(spark):
+    """The edge view's upstream plan runs once: E comes from the staged
+    cache, not from a second execution of the view."""
+    from pyspark.sql.types import BooleanType
+
+    from hoshizora_spark.graph.core import cache_superstep_edges
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def bump(_):
+        seen.add(1)
+        return True
+
+    view = (
+        spark.range(600)
+        .select((F.col("id") % 50).alias("src"), (F.col("id") * 7 % 50).alias("dst"))
+        .filter(F.udf(bump, BooleanType())("src"))
+    )
+    cached, key_type, E = cache_superstep_edges(view, 50)
+    try:
+        assert (E, key_type) == (600, "int")
+        assert len(cached.collect()) == E
+        assert seen.value == E
+    finally:
+        cached.unpersist()
+
+    # a view the caller cached (a same-column select resolves to that
+    # cache) is read from it and stays cached
+    mine = view.persist()
+    cached, _, _ = cache_superstep_edges(mine.select("src", "dst"), 50)
+    try:
+        assert mine.storageLevel.useMemory
+    finally:
+        cached.unpersist()
+        mine.unpersist()

@@ -40,10 +40,41 @@ def test_pagerank_resume_identical(spark, tmp_path):
     # fewer supersteps ran after resume than from scratch
     assert resumed.iterations < full.iterations
 
-    # lineage + metrics recorded per superstep
+    # lineage + metrics recorded per superstep: one row each, fixed schema
     m = ck2.metrics(spark)
-    assert m.count() >= partial.iterations + resumed.iterations
-    assert {"run_id", "iter", "edges_processed", "wall_ms"} <= set(m.columns)
+    assert m.dtypes == [
+        ("run_id", "string"),
+        ("iter", "int"),
+        ("edges_processed", "bigint"),
+        ("wall_ms", "double"),
+        ("max_abs_delta", "double"),
+        ("changed", "bigint"),
+    ]
+    rows = m.collect()
+    assert sorted(r["iter"] for r in rows) == list(
+        range(partial.iterations + resumed.iterations)
+    )
+    assert {r["run_id"] for r in rows} == {"r1"}
+
+
+def test_append_metrics_runs_no_spark_job(spark, tmp_path):
+    """A superstep's metrics row is a driver-side file write: no Spark job
+    (and no Python worker) is spent on telemetry."""
+    sc = spark.sparkContext
+    ck = CheckpointManager(str(tmp_path), "pagerank", run_id="m1")
+    sc.setJobGroup("hz_append_metrics", "append_metrics")
+    try:
+        ck.append_metrics(0, 10, 1.5, 0.25, None)
+        ck.append_metrics(1, 10, 2.5, None, 3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("hz_append_metrics")) == []
+    rows = sorted(ck.metrics(spark).collect(), key=lambda r: r["iter"])
+    assert [tuple(r) for r in rows] == [
+        ("m1", 0, 10, 1.5, 0.25, None),
+        ("m1", 1, 10, 2.5, None, 3),
+    ]
 
 
 def test_pagerank_csr_resume_identical(spark, tmp_path):
