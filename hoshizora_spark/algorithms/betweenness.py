@@ -7,14 +7,16 @@ bc(v) = Σ_{s≠v≠t} σ_st(v)/σ_st — the shortest-path brokerage score
 alongside PageRank/HITS/harmonic, and the classic two-phase Pregel
 workload (forward path counting, backward dependency accumulation).
 
-* **Forward phase** (one ``bsp_loop``): multi-source BFS wavefront with
+* **Forward phase** (``_bfs_wavefront``, one ``bsp_loop``; exact
+  harmonic centrality runs the same wavefront): multi-source BFS with
   path counts — state rows ``(vid, src, dist, sigma)``. The BFS layer
   property makes the fold append-only: a (vid, src) pair enters at its
   true distance exactly once, and ALL of its shortest-path mass arrives
   in that same superstep (every predecessor sits one layer down), so one
   carrier-fold ``groupBy(vid, src)`` both dedups reached pairs and sums
   σ for new ones — the same one-job superstep shape as every other loop
-  in the engine. Row count is the monotone convergence statistic.
+  in the engine. Only the frontier sends. Row count is the monotone
+  convergence statistic.
 
 * **Backward phase** (driver ladder, ≤ eccentricity plans): dependency
   δ_s(u) = Σ_{w: succ} σ_su/σ_sw · (1 + δ_s(w)) walks the BFS DAG one
@@ -48,17 +50,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hoshizora_spark.algorithms.anf import _edge_view, _until_repeat
 from hoshizora_spark.algorithms.walks import MAX_SEED, mix_sql
-from hoshizora_spark.graph.core import (
-    Graph,
-    cache_superstep_edges,
-    maybe_broadcast,
-    symmetrize,
-)
+from hoshizora_spark.graph.core import Graph, cache_superstep_edges, maybe_broadcast
 from hoshizora_spark.runtime.checkpoint import cut_lineage
-from hoshizora_spark.runtime.superstep import bsp_loop
+from hoshizora_spark.runtime.superstep import LoopResult, bsp_loop
 
-MAX_EXACT_VERTICES = 4_096  # all-sources pair state is O(V^2), like harmonic
+MAX_EXACT_VERTICES = 4_096  # all-sources wavefront state is O(V^2) pair rows
 
 
 @dataclass
@@ -70,43 +68,19 @@ class BetweennessResult:
     converged: bool
 
 
-def betweenness_centrality(
-    graph: Graph,
-    directed: bool = False,
-    sample_mod: int | None = None,
-    seed: int = 0,
-    round_dp: int | None = None,
-    max_rounds: int = 200,
-) -> BetweennessResult:
-    """Exact (``sample_mod=None``, all sources) or sampled Brandes
-    betweenness over the (un)directed simple graph. Isolated vertices and
-    sampled-out regions score 0.0."""
-    if not (0 <= seed <= MAX_SEED):
-        raise ValueError(f"seed must be in [0, {MAX_SEED}] (overflow-safe mix bound)")
-    if sample_mod is not None and sample_mod < 1:
-        raise ValueError("sample_mod must be >= 1")
-    spark = graph.spark
-    V = graph.num_vertices
-    if sample_mod is None and V > MAX_EXACT_VERTICES:
-        raise ValueError(
-            f"betweenness_centrality: all-sources pair state is O(V^2); "
-            f"V={V} > {MAX_EXACT_VERTICES}. Pass sample_mod to sample sources."
-        )
-    edges = (
-        graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-        if directed
-        else symmetrize(graph.edges)
-    )
-    edges, key_type, E = cache_superstep_edges(edges, V)
-
-    sources = graph.vertices()
-    if sample_mod is not None and sample_mod > 1:
-        sources = sources.filter(
-            F.expr(f"pmod({mix_sql('vid', 0, seed)}, {sample_mod})") == 0
-        )
-    num_sources = sources.count()
-
-    pair_bound = V * max(num_sources, 1)
+def _bfs_wavefront(
+    edges: DataFrame,
+    key_type: str,
+    E: int,
+    sources: DataFrame,
+    pair_bound: int,
+    max_rounds: int,
+) -> LoopResult:
+    """Multi-source BFS with path counts over a cached edge view: state
+    rows (vid, src, dist, sigma), one row per reached (vid, src) pair,
+    from (s, s, 0, 1.0) per source. Only the frontier (dist == superstep)
+    sends, and the reached-pair count stops the loop when it repeats.
+    Shared by the Brandes forward phase and exact harmonic centrality."""
 
     def init() -> DataFrame:
         return sources.select(
@@ -150,25 +124,51 @@ def betweenness_centrality(
             )
         )
 
-    prev: dict[str, float | None] = {"n": None}
-
-    def done(n: float) -> bool:
-        if prev["n"] is not None and n == prev["n"]:
-            return True
-        prev["n"] = n
-        return False
-
-    res = bsp_loop(
-        spark,
+    return bsp_loop(
+        sources.sparkSession,
         init=init,
         step=step,
         stat_expr=F.count(F.lit(1)),
-        done=done,
+        done=_until_repeat(),
         restore=lambda df: df,
         max_iters=max_rounds,
         edges_per_iter=E,
         metric_kind="changed",
     )
+
+
+def betweenness_centrality(
+    graph: Graph,
+    directed: bool = False,
+    sample_mod: int | None = None,
+    seed: int = 0,
+    round_dp: int | None = None,
+    max_rounds: int = 200,
+) -> BetweennessResult:
+    """Exact (``sample_mod=None``, all sources) or sampled Brandes
+    betweenness over the (un)directed simple graph. Isolated vertices and
+    sampled-out regions score 0.0."""
+    if not (0 <= seed <= MAX_SEED):
+        raise ValueError(f"seed must be in [0, {MAX_SEED}] (overflow-safe mix bound)")
+    if sample_mod is not None and sample_mod < 1:
+        raise ValueError("sample_mod must be >= 1")
+    V = graph.num_vertices
+    if sample_mod is None and V > MAX_EXACT_VERTICES:
+        raise ValueError(
+            f"betweenness_centrality: all-sources pair state is O(V^2); "
+            f"V={V} > {MAX_EXACT_VERTICES}. Pass sample_mod to sample sources."
+        )
+    edges, key_type, E = cache_superstep_edges(_edge_view(graph, directed), V)
+
+    sources = graph.vertices()
+    if sample_mod is not None and sample_mod > 1:
+        sources = sources.filter(
+            F.expr(f"pmod({mix_sql('vid', 0, seed)}, {sample_mod})") == 0
+        )
+    num_sources = sources.count()
+
+    pair_bound = V * max(num_sources, 1)
+    res = _bfs_wavefront(edges, key_type, E, sources, pair_bound, max_rounds)
     lev = res.state  # already lineage-cut by the loop's checkpoint
     row = lev.agg(F.max("dist").alias("h")).collect()[0]
     H = int(row["h"]) if row["h"] is not None else 0

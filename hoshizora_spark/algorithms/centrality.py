@@ -5,21 +5,17 @@ variant (Boldi-Vigna, "Axioms for centrality"). Not shipped by the
 reference (README.md:67, applications WIP); a standard link-graph ranking
 alongside PageRank.
 
-* ``harmonic_centrality`` — EXACT. State = the all-pairs BFS wavefront as
-  sparse (vid, src, dist) rows. The BFS layer property makes min-merge
-  append-only (a pair enters at its true distance and never improves), so
-  row count is the monotone convergence statistic and every superstep is
-  the same one-job carrier fold as everywhere else. Fixpoint state is
+* ``harmonic_centrality`` — EXACT. Σ 1/dist over the rows of Brandes
+  betweenness's multi-source BFS wavefront (``_bfs_wavefront``: sparse
+  (vid, src, dist, sigma) rows, frontier-only messages). Fixpoint state is
   Θ(Σ reachable pairs) = O(V²): verification-scale, capped at
   ``MAX_EXACT_VERTICES``.
 
-* ``harmonic_centrality_hll`` — HyperBall (Boldi-Rosa-Vigna): per-vertex
-  HLL ball sketches B(v, h) (the HyperANF state, V·m rows at any scale)
-  plus a per-vertex accumulator frame; after each superstep the per-vertex
-  ball estimate is joined against the running accumulator as
-  acc += (|B(v,h)| − |B(v,h−1)|)/h. Two extra exchanges per round over
-  V-row frames (the sketch merge stays the dominant E-row fold), error
-  inherits HLL's 1.04/√m per ball.
+* ``harmonic_centrality_hll`` — HyperBall (Boldi-Rosa-Vigna) on HyperANF's
+  loop (``_hll_balls``): per-vertex HLL ball sketches B(v, h) (V·m rows
+  at any scale), and after each merge the per-vertex ball estimate
+  accumulates as acc += (|B(v,h)| − |B(v,h−1)|)/h. Error inherits HLL's
+  1.04/√m per ball.
 
 Directed semantics: distances follow edge direction, so grouping at the
 DESTINATION yields in-harmonic centrality H(v) = Σ_u 1/d(u → v) — the
@@ -33,16 +29,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hoshizora_spark.algorithms.anf import _edge_view, _hll_balls
+from hoshizora_spark.algorithms.betweenness import MAX_EXACT_VERTICES, _bfs_wavefront
 from hoshizora_spark.graph.core import (
     Graph,
     cache_superstep_edges,
     maybe_broadcast,
     symmetrize,
 )
-from hoshizora_spark.runtime.checkpoint import cut_lineage
 from hoshizora_spark.runtime.superstep import bsp_loop
-
-MAX_EXACT_VERTICES = 4_096  # fixpoint state ≤ V² ≈ 16.8M pair rows
 
 
 @dataclass
@@ -50,10 +45,6 @@ class CentralityResult:
     centrality: DataFrame  # (vid: long, centrality: double)
     rounds: int
     converged: bool
-
-
-def _edge_view(graph: Graph, directed: bool) -> DataFrame:
-    return graph.edges.select("src", "dst") if directed else symmetrize(graph.edges)
 
 
 def harmonic_centrality(
@@ -66,56 +57,14 @@ def harmonic_centrality(
 
     ``round_dp``: optional decimal rounding of the final sum (the oracle
     convention for cross-engine double comparison; None = raw)."""
-    spark = graph.spark
     V = graph.num_vertices
     if V > MAX_EXACT_VERTICES:
         raise ValueError(
             f"harmonic_centrality: exact all-pairs state is O(V^2); V={V} > "
             f"{MAX_EXACT_VERTICES}. Use harmonic_centrality_hll."
         )
-    edges = _edge_view(graph, directed)
-    edges, key_type, E = cache_superstep_edges(edges, V)
-
-    def init() -> DataFrame:
-        return graph.vertices().select(
-            "vid", F.col("vid").alias("src"), F.lit(0).cast("long").alias("dist")
-        )
-
-    def step(state: DataFrame, it: int) -> DataFrame:
-        st = maybe_broadcast(
-            state.select(F.col("vid").cast(key_type).alias("u"), "src", "dist"),
-            V * V,  # worst-case pair bound
-        )
-        msgs = edges.join(st, edges["src"] == st["u"]).select(
-            F.col("dst").cast("long").alias("vid"),
-            st["src"].alias("src"),
-            (st["dist"] + 1).alias("dist"),
-        )
-        # BFS layer property: an existing (vid, src) row already holds the
-        # true distance, so min() only ever ADDS rows — count is monotone
-        return msgs.unionByName(state).groupBy("vid", "src").agg(
-            F.min("dist").alias("dist")
-        )
-
-    prev: dict[str, float | None] = {"n": None}
-
-    def done(n: float) -> bool:
-        if prev["n"] is not None and n == prev["n"]:
-            return True
-        prev["n"] = n
-        return False
-
-    res = bsp_loop(
-        spark,
-        init=init,
-        step=step,
-        stat_expr=F.count(F.lit(1)),
-        done=done,
-        restore=lambda df: df,
-        max_iters=max_rounds,
-        edges_per_iter=E,
-        metric_kind="changed",
-    )
+    edges, key_type, E = cache_superstep_edges(_edge_view(graph, directed), V)
+    res = _bfs_wavefront(edges, key_type, E, graph.vertices(), V * V, max_rounds)
     edges.unpersist()
     h = (
         res.state.filter(F.col("dist") > 0)
@@ -285,84 +234,10 @@ def harmonic_centrality_hll(
 ) -> CentralityResult:
     """HyperBall: approximate H(v) at any scale (V·m sketch rows).
 
-    Per round: one E-row sketch merge (the HyperANF superstep) + one
-    V-row ball-estimate agg + one V-row accumulator join — all state
-    linear in V. Stops at the exact register fixpoint (monotone rho
+    Per round: one E-row sketch merge (the HyperANF superstep) + one V-row
+    job that estimates every ball and folds it into the accumulator — all
+    state linear in V. Stops at the exact register fixpoint (monotone rho
     mass), i.e. when every ball stops growing."""
-    from hoshizora_spark.algorithms.anf import _alpha, _rho_expr
-
-    if m < 16 or (m & (m - 1)) != 0:
-        raise ValueError(f"harmonic_centrality_hll: m must be a power of two >= 16, got {m}")
-    spark = graph.spark
-    V = graph.num_vertices
-    edges = _edge_view(graph, directed)
-    edges, key_type, E = cache_superstep_edges(edges, V)
-    m_f = float(m)
-    alpha = _alpha(m)
-
-    def ball_estimates(sketch: DataFrame) -> DataFrame:
-        """(vid, est) — HLL estimate of |B(v, h)| per vertex."""
-        per = sketch.groupBy("vid").agg(
-            F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s"),
-            F.count(F.lit(1)).alias("p"),
-        )
-        zeros = F.lit(m_f) - F.col("p")
-        raw = F.lit(alpha * m_f * m_f) / (F.col("s") + zeros)
-        est = F.when(
-            (zeros > 0) & (raw <= 2.5 * m_f), F.lit(m_f) * F.log(F.lit(m_f) / zeros)
-        ).otherwise(raw)
-        return per.select("vid", est.alias("est"))
-
-    h1 = F.xxhash64(F.col("vid"), F.lit("anf_reg"))
-    h2 = F.xxhash64(F.col("vid"), F.lit("anf_rho"))
-    sketch = cut_lineage(
-        graph.vertices().select(
-            "vid",
-            F.pmod(h1, F.lit(m)).cast("int").alias("reg"),
-            _rho_expr(h2).alias("rho"),
-        )
-    )
-    # accumulator: prev-ball estimate + running harmonic sum, per vertex
-    acc = cut_lineage(
-        ball_estimates(sketch).select(
-            "vid", F.col("est").alias("prev_est"), F.lit(0.0).alias("acc")
-        )
-    )
-    prev_mass: float | None = None
-    rounds, converged = 0, False
-    for it in range(1, max_rounds + 1):
-        st = maybe_broadcast(
-            sketch.select(F.col("vid").cast(key_type).alias("src"), "reg", "rho"), V * m
-        )
-        msgs = edges.join(st, "src").select(
-            F.col("dst").cast("long").alias("vid"), "reg", "rho"
-        )
-        sketch = cut_lineage(
-            msgs.unionByName(sketch).groupBy("vid", "reg").agg(F.max("rho").alias("rho"))
-        )
-        mass_row = sketch.agg(F.sum("rho")).first()
-        mass = float(mass_row[0]) if mass_row and mass_row[0] is not None else 0.0
-        rounds = it
-        if prev_mass is not None and mass == prev_mass:
-            converged = True
-            break
-        prev_mass = mass
-        est = ball_estimates(sketch)
-        acc = cut_lineage(
-            maybe_broadcast(acc, V)
-            .join(est, "vid")
-            .select(
-                "vid",
-                F.col("est").alias("prev_est"),
-                (
-                    F.col("acc")
-                    + F.greatest(F.col("est") - F.col("prev_est"), F.lit(0.0))
-                    / F.lit(float(it))
-                ).alias("acc"),
-            )
-        )
-    edges.unpersist()
-    out = graph.vertices().join(
-        acc.select("vid", F.col("acc").alias("centrality")), "vid", "left"
-    ).select("vid", F.coalesce(F.col("centrality"), F.lit(0.0)).alias("centrality"))
-    return CentralityResult(centrality=out, rounds=rounds, converged=converged)
+    res, _, acc = _hll_balls(graph, m, directed, max_rounds, "harmonic_centrality_hll")
+    out = acc.select("vid", F.col("acc").alias("centrality"))
+    return CentralityResult(centrality=out, rounds=res.iterations, converged=res.converged)

@@ -103,7 +103,8 @@ def smoothed_pagerank(
             F.col("m").alias("old_m"),
         )
 
-    ew = _weighted_edges(graph)
+    # staged: the count and the init read one execution of the groupBy/join
+    ew = _weighted_edges(graph).persist()
     num_edges = ew.count()
     n_part = sized_partitions(spark, num_edges)
 
@@ -119,6 +120,7 @@ def smoothed_pagerank(
         edges_per_iter=num_edges,
         metric_kind="delta",
     )
+    ew.unpersist()
     return EdgeStatePageRankResult(
         ranks=ranks_of(res.state).select("vid", F.col("r").alias("rank")),
         messages=res.state,

@@ -67,9 +67,12 @@ class KCoreResult:
 
 def k_core(graph: Graph, max_rounds: int = 10_000) -> KCoreResult:
     spark = graph.spark
-    sym = symmetrize(graph.edges)  # simple undirected: dedup + no loops
+    # simple undirected: dedup + no loops; staged so the count and the
+    # checkpoint read one execution of the distinct
+    sym = symmetrize(graph.edges).persist()
     n_part = sized_partitions(spark, sym.count())
     edges = sym.repartition(n_part, "src").localCheckpoint(eager=True)
+    sym.unpersist()
 
     # isolated / not-yet-peeled vertices end with coreness 0 by default
     result = graph.vertices().select("vid", F.lit(0).cast("long").alias("coreness"))

@@ -58,9 +58,9 @@ def bsp_loop(
       jobs per superstep (the CollectMetrics node rides the materialization
       the checkpoint already runs). NULL metric (empty frame) reads as 0.0.
     * ``stat`` (fallback): a callable issuing its own action AFTER the
-      lineage cut — one extra job per superstep. Kept for ANF
-      (algorithms/anf.py:248), whose estimate is a per-vertex ``groupBy``
-      followed by a sum, which one ``Observation`` aggregate cannot express.
+      lineage cut — one extra job per superstep. Kept for the HyperANF /
+      HyperBall loop (``algorithms/anf.py:_hll_balls``): its job builds the
+      per-vertex ball-estimate frame, which an ``Observation`` cannot.
     """
     if stat_expr is None and stat is None:
         raise ValueError("bsp_loop needs stat_expr or stat")

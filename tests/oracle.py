@@ -679,3 +679,36 @@ def greedy_coloring_degree(
         r += 1
         assert r <= 10_000, "degree coloring oracle failed to converge"
     return np.array([color[v] for v in range(V)], dtype=np.int64)
+
+
+def hyperanf(
+    edges: list[tuple[int, int]],
+    reg: np.ndarray,
+    rho: np.ndarray,
+    m: int,
+    directed: bool = False,
+) -> list[float]:
+    """HyperANF replay from the engine's per-vertex register init (vertex v
+    holds ``rho[v]`` in register ``reg[v]``): registers max-propagate one
+    hop per round to the register fixpoint, and N(h) = Σ_v HLL estimate of
+    v's ball (bias constant alpha_m, small-range linear counting). Returns
+    [V, N(1), ..., N(h*)], N(0) being the known V."""
+    V = len(reg)
+    src, dst = _edge_arrays(edges)
+    if not directed:
+        src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1.0 + 1.079 / m))
+    regs = np.zeros((V, m), dtype=np.int64)
+    regs[np.arange(V), reg] = rho
+    ladder = [float(V)]
+    while True:
+        nxt = regs.copy()
+        np.maximum.at(nxt, dst, regs[src])
+        if (nxt == regs).all():
+            return ladder
+        regs = nxt
+        zeros = (regs == 0).sum(axis=1)
+        raw = alpha * m * m / np.exp2(-regs.astype(np.float64)).sum(axis=1)
+        small = (zeros > 0) & (raw <= 2.5 * m)
+        est = np.where(small, m * np.log(m / np.maximum(zeros, 1)), raw)
+        ladder.append(float(est.sum()))

@@ -83,3 +83,22 @@ def test_anf_hll_m_guard(spark):
     g = Graph.from_edges(edges_from_pairs(spark, [(0, 1)]))
     with pytest.raises(ValueError, match="power of two"):
         neighborhood_function_hll(g, m=48)
+
+
+@pytest.mark.parametrize("seed,V", [(56, 40), (65, 100)])
+def test_anf_hll_runs_to_register_fixpoint(spark, seed, V):
+    """A directed in-tree grows its balls' estimates slowly near the root:
+    two rounds can sum to one N(h) while registers still change. The loop
+    must run to the register fixpoint, matching a numpy replay of the same
+    registers (stopping on a repeated Σ estimate cut this ladder short)."""
+    from hoshizora_spark.algorithms.anf import _hll_registers
+
+    rng = np.random.default_rng(seed)
+    edges = [(i, int(rng.integers(i))) for i in range(1, V)]
+    g = Graph.from_edges(edges_from_pairs(spark, edges))
+    init = sorted((r["vid"], r["reg"], r["rho"]) for r in _hll_registers(g, 16).collect())
+    _, reg, rho = (np.array(c) for c in zip(*init))
+    want = oracle.hyperanf(edges, reg, rho, m=16, directed=True)
+    res = neighborhood_function_hll(g, m=16, directed=True)
+    assert res.converged
+    np.testing.assert_allclose(res.n_per_h, want, rtol=1e-9)

@@ -438,3 +438,30 @@ def test_cache_superstep_edges_runs_view_once(spark):
     finally:
         cached.unpersist()
         mine.unpersist()
+
+
+def test_k_core_runs_edge_view_once(spark):
+    """k_core sizes and checkpoints its symmetrized view from one execution
+    of the view's upstream plan, not a count plus a second execution."""
+    from pyspark.sql.types import BooleanType
+
+    from hoshizora_spark import k_core
+    from hoshizora_spark.graph.core import symmetrize
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def bump(_):
+        seen.add(1)
+        return True
+
+    view = (
+        spark.range(300)
+        .select((F.col("id") % 40).alias("src"), (F.col("id") * 7 % 40).alias("dst"))
+        .filter(F.udf(bump, BooleanType())("src"))
+    )
+    g = Graph.from_edges(view, num_vertices=40)
+    symmetrize(g.edges).count()
+    once = seen.value
+    assert once > 0
+    k_core(g)
+    assert seen.value == 2 * once
